@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from bento_spark.queries import query
 from bento_spark.queries.relational import _t
 from bento_spark.streaming import windows as W
+from bento_spark.streaming.start import state_partitions, streaming_start
 
 
 @query(
@@ -166,83 +167,6 @@ def dedupe_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from contextlib import contextmanager
-
-
-def _stream_state_partitions(
-    spark: SparkSession, rows_per_batch: int | None = None
-) -> str:
-    """State-partition count for the certification runs. These fixed
-    fixtures key ~100s of groups/pairs, so a handful of partitions is
-    ample (the r12 A/B: 4 beat 8 on every row, 2/1 regressed join
-    stability) — but a LITERAL 4 would cap state-store parallelism for
-    anyone reusing this path at real key cardinality on a real cluster
-    (VERDICT r12 #3/#7). Derivation: the core-derived base (local[32]
-    -> 4, a 512-core cluster -> 64) RAISED by the micro-batch volume
-    when the caller knows it — 4 partitions were the sf0.01 optimum
-    but serialized 170k-row sf1 batches through 4 state tasks (r13 A/B
-    at sf1: partitions 4/8/16/32 -> 49/37/23/24s for
-    stream_stateful_totals; the ~10k-rows-per-task target lands on the
-    knee at both SFs). Explicit override via
-    SPARK_GRAFT_STREAM_PARTITIONS for deployments that know their key
-    count."""
-    import os as _os
-
-    env = _os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return env
-    par = spark.sparkContext.defaultParallelism
-    base = max(4, min(par // 8, 4096))
-    if rows_per_batch:
-        by_volume = min((int(rows_per_batch) + 9_999) // 10_000, par, 4096)
-        return str(max(base, by_volume))
-    return str(base)
-
-
-@contextmanager
-def _stream_run_confs(spark: SparkSession, partitions: str | None = None):
-    """Session confs for the gate's streaming certification runs,
-    restored on exit:
-
-    * ``shuffle.partitions``: see _stream_state_partitions — the rows
-      key ~100s of groups/pairs, so a handful of state partitions is
-      ample — at the session default every micro-batch pays one state
-      task + one snapshot per partition. A/B at sf0.01 (warm, 2 reps
-      each): 4 beats 8 on every row (join 15.9 -> 12.6s, stateful
-      10.0 -> 7.9s, late-drop 10.4 -> 9.5s, recovery ~equal) and 2/1
-      regress the join's stability — the stream-stream join keeps 4
-      state stores per partition, so partition count multiplies
-      per-commit file I/O.
-    * ``checkpoint.fileChecksum.enabled`` (Spark 4.1, default on):
-      every offset/commit/state file gets a companion checksum file —
-      integrity verification against storage corruption, measured at
-      30-50%% of these rows' wall-clock for checkpoints that live in
-      ephemeral /tmp for exactly one run. Off by default HERE ONLY
-      (the per-row conf is restored after); production deployments
-      with durable checkpoint stores re-enable via
-      SPARK_GRAFT_CKPT_CHECKSUM=true.
-    """
-    import os as _os
-
-    if partitions is None:
-        partitions = _stream_state_partitions(spark)
-    ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    prev_p = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_c = spark.conf.get(ck, None)
-    spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    spark.conf.set(
-        ck, _os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false")
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_p)
-        if prev_c is None:
-            spark.conf.unset(ck)
-        else:
-            spark.conf.set(ck, prev_c)
-
-
 def _stage_time_slices(
     spark: SparkSession, ev: DataFrame, base: str,
     n_slices: int = 6, sentinel: tuple | None = None,
@@ -261,7 +185,7 @@ def _stage_time_slices(
     in_dir = f"{base}/input"
     os.makedirs(in_dir)
     # row count rides the same bounds job — it sizes the run's state
-    # partitions (see _stream_state_partitions)
+    # partitions (see state_partitions)
     lo, hi, n_rows = ev.agg(
         F.min("ts"), F.max("ts"), F.count(F.lit(1))
     ).first()
@@ -389,39 +313,34 @@ def stream_recovery_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ~100s of window x event_type keys; each invocation wipes `base`,
     # so the sticky checkpoint partition count never carries across runs.
-    with _stream_run_confs(
-        spark, _stream_state_partitions(spark, n_staged // 6)
-    ):
-        # run 1: live trigger, killed after the second committed batch
-        q1 = (
-            build_stream()
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 1:
-                break
-            _time.sleep(0.1)
-        q1.stop()
-        q1.awaitTermination(30)
+    partitions = state_partitions(spark, n_staged // 6)
 
-        # run 2: recover from the checkpoint, drain everything, terminate
-        q2 = (
-            build_stream()
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination(300)
+    def start(**trigger):
+        with streaming_start(spark, ckpt, partitions):
+            return (
+                build_stream()
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(**trigger)
+                .start()
+            )
+
+    # run 1: live trigger, killed after the second committed batch
+    q1 = start(processingTime="500 milliseconds")
+    deadline = _time.time() + 120
+    while _time.time() < deadline:
+        p = q1.lastProgress
+        if p is not None and p["batchId"] >= 1:
+            break
+        _time.sleep(0.1)
+    q1.stop()
+    q1.awaitTermination(30)
+
+    # run 2: recover from the checkpoint, drain everything, terminate
+    q2 = start(availableNow=True)
+    q2.awaitTermination(300)
 
     out = spark.read.parquet(sink).filter(F.col("event_type") != "__flush")
     return out.orderBy("window_start", "event_type")
@@ -523,18 +442,19 @@ def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     _STATEFUL_RUN[0] += 1
     qname = f"stream_join_{_STATEFUL_RUN[0]}"
     # the join keys ~120 surviving pairs
-    with _stream_run_confs(
-        spark, _stream_state_partitions(spark, (n_a + n_b) // 4)
+    ckpt = f"{base}/ckpt"
+    with streaming_start(
+        spark, ckpt, state_partitions(spark, (n_a + n_b) // 4)
     ):
         q = (
             joined.writeStream.format("memory")
             .queryName(qname)
-            .option("checkpointLocation", f"{base}/ckpt")
+            .option("checkpointLocation", ckpt)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+    q.awaitTermination(300)
     return spark.table(qname).orderBy(
         "user_id", "view_event", "purchase_event"
     )
@@ -605,14 +525,15 @@ def stream_kafka_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("topic", "gate")
             .load()
         )
-        q = (
-            sdf.select("value")
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
+        with streaming_start(spark):
+            q = (
+                sdf.select("value")
+                .writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("append")
+                .trigger(processingTime="300 milliseconds")
+                .start()
+            )
 
         def drained() -> int:
             return spark.table(qname).count()
@@ -701,18 +622,17 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     qname = f"stateful_totals_{_STATEFUL_RUN[0]}"
     # ~100s of user keys; _stage_time_slices wipes `base`, so the
     # checkpoint's sticky partition count never carries across runs.
-    with _stream_run_confs(
-        spark, _stream_state_partitions(spark, n_staged // 6)
-    ):
+    ckpt = f"{base}/ckpt"
+    with streaming_start(spark, ckpt, state_partitions(spark, n_staged // 6)):
         q = (
             totals.writeStream.format("memory")
             .queryName(qname)
-            .option("checkpointLocation", f"{base}/ckpt")
+            .option("checkpointLocation", ckpt)
             .outputMode("update")
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+    q.awaitTermination(300)
     from pyspark.sql import Window as Wnd
 
     emissions = spark.table(qname)
@@ -780,17 +700,19 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sink, ckpt = f"{base}/sink", f"{base}/ckpt"
+    partitions = state_partitions(spark, n_staged // 3)
 
     def run_once():
-        q = (
-            build_agg()
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        with streaming_start(spark, ckpt, partitions):
+            q = (
+                build_agg()
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
         done = q.awaitTermination(600)
         if not done:
             # NEVER leave the query running: a second start on the same
@@ -799,24 +721,21 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.awaitTermination(60)
             raise RuntimeError("late-drop run did not drain in 600s")
 
-    with _stream_run_confs(
-        spark, _stream_state_partitions(spark, n_staged // 3)
-    ):
-        # run 1 drains the on-time slices + the sentinel, committing a
-        # watermark of end-of-stream+3h-30min into the checkpoint
-        run_once()
-        # stragglers arrive in a SECOND run against the same checkpoint:
-        # the persisted watermark guarantees their batch starts far past
-        # every real window, whatever the file-batch granularity (at
-        # larger SFs the source may group trailing files into one batch,
-        # which would leave the sentinel's watermark un-committed before
-        # the late rows — two runs make the ordering structural)
-        tmp = f"{base}/tmp_late"
-        late.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.rename(f"{tmp}/{src}", f"{in_dir}/zz_late.parquet")
-        shutil.rmtree(tmp)
-        run_once()
+    # run 1 drains the on-time slices + the sentinel, committing a
+    # watermark of end-of-stream+3h-30min into the checkpoint
+    run_once()
+    # stragglers arrive in a SECOND run against the same checkpoint:
+    # the persisted watermark guarantees their batch starts far past
+    # every real window, whatever the file-batch granularity (at
+    # larger SFs the source may group trailing files into one batch,
+    # which would leave the sentinel's watermark un-committed before
+    # the late rows — two runs make the ordering structural)
+    tmp = f"{base}/tmp_late"
+    late.coalesce(1).write.mode("overwrite").parquet(tmp)
+    src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.rename(f"{tmp}/{src}", f"{in_dir}/zz_late.parquet")
+    shutil.rmtree(tmp)
+    run_once()
     hi_floor = hi.replace(minute=0, second=0, microsecond=0)
     return (
         spark.read.parquet(sink)

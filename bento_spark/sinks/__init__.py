@@ -27,10 +27,18 @@ def register_sink(name: str):
 
 def run_sink(df: DataFrame, is_streaming: bool, name: str, conf: dict):
     """Execute the sink. Batch: blocking write, returns None. Streaming:
-    returns the started StreamingQuery (caller stops/awaits)."""
+    returns the started StreamingQuery (caller stops/awaits), started
+    under the engine's one start policy (streaming/start.py)."""
     if name not in SINKS:
         raise ValueError(f"unknown output type {name!r} (have {sorted(SINKS)})")
-    return SINKS[name](df, is_streaming, conf or {})
+    conf = conf or {}
+    if not is_streaming:
+        return SINKS[name](df, False, conf)
+    from bento_spark.streaming.start import streaming_start
+
+    checkpoint = conf.get("checkpoint") if isinstance(conf, dict) else None
+    with streaming_start(df.sparkSession, checkpoint):
+        return SINKS[name](df, True, conf)
 
 
 def _file_sink(fmt: str):
@@ -181,11 +189,14 @@ register_sink("redpanda_common")(_kafka)
 @register_sink("drop")
 def _drop(df: DataFrame, is_streaming: bool, conf: dict):
     """`drop` output (output_drop.go): discard after processing — the
-    noop format still materializes the plan so processors run."""
+    noop format still materializes the plan so processors run. Without
+    a configured `checkpoint`, each query gets a fresh temporary one, so
+    no later pipeline resumes from (or clashes with) its offsets."""
     if is_streaming:
-        return df.writeStream.format("noop").option(
-            "checkpointLocation", conf.get("checkpoint", "/tmp/bento_drop_ckpt")
-        ).start()
+        w = df.writeStream.format("noop")
+        if "checkpoint" in conf:
+            w = w.option("checkpointLocation", conf["checkpoint"])
+        return w.start()
     df.write.format("noop").mode("overwrite").save()
     return None
 

@@ -251,12 +251,11 @@ def _sync_response_sink(df: DataFrame, is_streaming: bool, conf: dict):
     reference's own behavior is a no-op ack — mirrored here (the frame
     is materialized so upstream effects run, nothing is written)."""
     if is_streaming:
-        return (
-            df.writeStream.format("noop")
-            .option("checkpointLocation",
-                    conf.get("checkpoint", "/tmp/bento_syncresp_ckpt"))
-            .start()
-        )
+        # like `drop`: a fresh temporary checkpoint unless one is set
+        w = df.writeStream.format("noop")
+        if "checkpoint" in conf:
+            w = w.option("checkpointLocation", conf["checkpoint"])
+        return w.start()
     df.write.format("noop").mode("overwrite").save()
     return None
 

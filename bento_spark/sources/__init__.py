@@ -12,9 +12,11 @@ Each source returns (DataFrame, is_streaming).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 SOURCES: dict[str, Callable] = {}
 
@@ -59,6 +61,15 @@ def build_source(spark: SparkSession, name: str, conf: dict) -> tuple[DataFrame,
     return SOURCES[name](spark, conf or {})
 
 
+def _load(reader, path) -> DataFrame:
+    """``reader.load`` over one path or a ``paths:`` list. A batch reader
+    takes the list as is; a stream reader takes one path, so a stream
+    over several is the union of one file stream per path."""
+    if isinstance(path, str) or not isinstance(reader, DataStreamReader):
+        return reader.load(path)
+    return reduce(DataFrame.union, [reader.load(str(p)) for p in path])
+
+
 def _file_source(fmt: str):
     def fn(spark: SparkSession, conf: dict) -> tuple[DataFrame, bool]:
         # `paths: []` is the reference spelling (input_parquet.go);
@@ -78,7 +89,7 @@ def _file_source(fmt: str):
         elif stream:
             # file streams require a schema; infer from a batch read once
             reader = reader.schema(spark.read.format(fmt).options(**opts).load(path).schema)
-        df = reader.format(fmt).options(**opts).load(path)
+        df = _load(reader.format(fmt).options(**opts), path)
         # `spread_by: <col>` range-partitions the scan by the pipeline's
         # OUTPUT sort key (operators/dedup.range_spread): a batch
         # pipeline ending in orderBy(key) otherwise re-executes its
@@ -174,7 +185,7 @@ def _file_lines(spark: SparkSession, conf: dict) -> tuple[DataFrame, bool]:
     fmt = reader.format("text")
     if whole_file:
         fmt = fmt.option("wholetext", True)
-    df = fmt.load(path)
+    df = _load(fmt, path)
     df = df.withColumnRenamed("value", "content").withColumn(
         META,
         F.create_map(F.lit("path"), F.input_file_name()),
@@ -692,13 +703,28 @@ def _kafka(spark: SparkSession, conf: dict) -> tuple[DataFrame, bool]:
         from bento_spark.sources.kafka_source import BentoKafkaDataSource
 
         spark.dataSource.register(BentoKafkaDataSource)
-        addr = (conf.get("addresses") or conf.get("seed_brokers")
-                or ["localhost:9092"])[0]
-        topics = conf.get("topics") or [conf.get("topic", "")]
-        reader = (spark.readStream if stream else spark.read).format(
-            "bento_kafka"
-        ).option("address", addr).option("topic", topics[0])
+        # the first seed broker, as the host/port the reader dials
+        brokers = _csv_list(
+            conf.get("addresses") or conf.get("seed_brokers")
+        ) or ["localhost:9092"]
+        host, _, port = brokers[0].rpartition(":")
+        if not host or not port.isdigit():  # no explicit port
+            host, port = brokers[0], "9092"
+        topics = _csv_list(conf.get("topics") or conf.get("topic"))
+        reader = (
+            (spark.readStream if stream else spark.read).format("bento_kafka")
+            .option("host", host.strip("[]"))
+            .option("port", port)
+            .option("topic", topics[0] if topics else "")
+        )
         return reader.load(), stream
+
+
+def _csv_list(v) -> list[str]:
+    """A reference list field (`addresses`, `topics`): a string or a
+    list of strings, each possibly comma-separated."""
+    items = [v] if isinstance(v, str) else list(v or [])
+    return [p.strip() for i in items for p in str(i).split(",") if p.strip()]
 
 
 # the franz-go-backed variants share the kafka config surface

@@ -246,3 +246,22 @@ def test_deliver_retries_transient_broker_error(spark, broker):
         batch_size=10,
     )
     assert stats["delivered"] == 6 and stats["dead"] == 0
+
+
+def test_yaml_kafka_input_dials_configured_address(spark, broker):
+    """The `kafka` input's fallback (no native connector jars) dials the
+    configured seed broker, not localhost:9092."""
+    from bento_spark.operators.kafka_wire import KafkaProducerClient as KPC
+    from bento_spark.sources import build_source
+
+    assert broker.port != 9092
+    c = KPC(port=broker.port)
+    c.produce("t1", 0, [(None, b"a"), (None, b"b")])
+    c.close()
+    for addresses in ([f"127.0.0.1:{broker.port}"],
+                      f"127.0.0.1:{broker.port},127.0.0.1:1"):
+        df, stream = build_source(spark, "kafka", {
+            "addresses": addresses, "topics": ["t1"], "stream": False,
+        })
+        assert not stream
+        assert sorted(r["value"] for r in df.collect()) == ["a", "b"]

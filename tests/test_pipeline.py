@@ -4,6 +4,8 @@ declare a pipeline, run it, assert the output batch."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from bento_spark.plans import build_pipeline, load_config
@@ -166,6 +168,37 @@ pipeline:
     assert q.awaitTermination(180)
     n = spark.sql("SELECT sum(n) AS s FROM t_pipe_win").collect()[0]["s"]
     assert n == spark.read.parquet(f"{SF_DIR}/events.parquet").count()
+
+
+def test_file_inputs_stream_a_paths_list(spark, tmp_path):
+    """`file` and `json` with a `paths:` list and `stream: true` read
+    every listed path (a stream reader loads one path at a time)."""
+    from bento_spark.sources import build_source
+
+    a, b = tmp_path / "a", tmp_path / "b"
+    a.mkdir()
+    b.mkdir()
+    (a / "1.json").write_text('{"k": "x1"}\n{"k": "x2"}\n')
+    (b / "1.json").write_text('{"k": "y1"}\n')
+    for name, conf, col in (
+        ("file", {}, "content"),
+        ("json", {"schema": "k STRING"}, "k"),
+    ):
+        df, stream = build_source(
+            spark, name, {"paths": [str(a), str(b)], "stream": True, **conf}
+        )
+        assert stream and df.isStreaming
+        q = (
+            df.select(col).writeStream.format("memory")
+            .queryName(f"t_paths_{name}")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        got = sorted(r[0] for r in spark.table(f"t_paths_{name}").collect())
+        if name == "file":
+            got = [json.loads(v)["k"] for v in got]
+        assert got == ["x1", "x2", "y1"]
 
 
 def test_file_source_scanners(spark, tmp_path):

@@ -114,39 +114,32 @@ def test_streaming_generate_rate_source(spark):
 
 
 def test_stream_run_confs_set_and_restore(spark):
-    """The shared streaming conf context pins a small state partition
-    count and disables the Spark 4.1 checkpoint file-checksum companion
-    writes for the certification run, then restores the session."""
-    from bento_spark.queries.streaming import _stream_run_confs
+    """The shared streaming start policy pins the derived state partition
+    count a caller passes for the start and restores the session
+    afterwards, leaving Spark 4.1's checkpoint checksums at the
+    session's value; without a count the session's stays."""
+    from bento_spark.streaming.start import state_partitions, streaming_start
 
     ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(ck, "true")
-    with _stream_run_confs(spark):
+    with streaming_start(spark, partitions=state_partitions(spark)):
         # derived, not a literal: floor 4 locally, par//8 on clusters,
-        # SPARK_GRAFT_STREAM_PARTITIONS overrides (VERDICT r12 #7)
-        from bento_spark.queries.streaming import _stream_state_partitions
-
+        # SPARK_GRAFT_STREAM_PARTITIONS overrides
         assert (
             spark.conf.get("spark.sql.shuffle.partitions")
-            == _stream_state_partitions(spark)
-            == "4"  # cpus=4 test session: max(4, 4//8) = the old pin
+            == state_partitions(spark)
+            == "4"  # cpus=4 test session: max(4, 4//8)
         )
-        assert spark.conf.get(ck) == "false"
+        assert spark.conf.get(ck) == "true"
     os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = "16"
     try:
-        with _stream_run_confs(spark):
+        with streaming_start(spark, partitions=state_partitions(spark)):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
     finally:
         del os.environ["SPARK_GRAFT_STREAM_PARTITIONS"]
+    with streaming_start(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert spark.conf.get(ck) == "true"
     spark.conf.unset(ck)
-    # honoring the production re-enable dial
-    os.environ["SPARK_GRAFT_CKPT_CHECKSUM"] = "true"
-    try:
-        with _stream_run_confs(spark):
-            assert spark.conf.get(ck) == "true"
-    finally:
-        del os.environ["SPARK_GRAFT_CKPT_CHECKSUM"]
-        spark.conf.unset(ck)
