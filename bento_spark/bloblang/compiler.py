@@ -1300,12 +1300,17 @@ def _compile_method(node: A.MethodCall, env: Env) -> Column:
             return _bento_type_variant(recv)
     if node.name == "length":
         # Bloblang length() is polymorphic (strings AND arrays/maps);
-        # dispatch on the analyzed type, defaulting to string length
-        from pyspark.sql.types import ArrayType, MapType
+        # dispatch on the analyzed type, defaulting to string length;
+        # VARIANT receivers dispatch per value
+        from pyspark.sql.types import ArrayType, MapType, VariantType
 
         t = _type_of(env, recv)
         if isinstance(t, (ArrayType, MapType)):
             return F.size(recv)
+        if isinstance(t, VariantType):
+            from bento_spark.bloblang.stdlib import _bento_length_variant
+
+            return _bento_length_variant(recv)
         return F.length(recv)
     if node.name == "contains":
         # polymorphic too: substring on strings, membership on arrays

@@ -725,6 +725,21 @@ def _bento_type_variant(c):
         .when(vt.startswith("ARRAY"), F.lit("array"))
         .otherwise(F.lit("object"))
     )
+
+
+def _bento_length_variant(c):
+    """`length()` for VARIANT receivers: a cast to string would measure
+    the JSON text (`["blue","new"]` -> 14), so dispatch per value on
+    schema_of_variant: arrays and objects count their elements, strings
+    their characters. Other values have no length (NULL)."""
+    vt = F.schema_of_variant(c)
+    return (
+        F.when(vt.startswith("ARRAY"),
+               F.size(F.variant_get(c, "$", "array<variant>")))
+        .when(vt.startswith("OBJECT"),
+              F.size(F.variant_get(c, "$", "map<string,variant>")))
+        .when(vt == "STRING", F.length(F.variant_get(c, "$", "string")))
+    )
 # try_parse_json: malformed input must flow to .catch()/_error, not
 # throw from the JVM (a plain parse_json exception is untrappable)
 method("parse_json", "b")(

@@ -43,6 +43,9 @@ import secrets
 import threading
 import time
 from collections.abc import Callable
+from http.server import BaseHTTPRequestHandler
+
+from bento_spark.serving import HttpServer
 
 
 class MetricsRegistry:
@@ -128,66 +131,52 @@ def prometheus_exposition(reg: MetricsRegistry) -> str:
     return "\n".join(out) + "\n"
 
 
-class PrometheusServer:
+class _MetricsHandler(BaseHTTPRequestHandler):
+    def log_message(self, *a):
+        pass
+
+    def _body(self, ctype: str, body: bytes) -> None:
+        self.send_response(200)
+        self.send_header("Content-Type", ctype)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+
+class _PrometheusHandler(_MetricsHandler):
+    def do_GET(self):
+        if self.path not in ("/metrics", "/"):
+            self.send_response(404)
+            self.end_headers()
+            return
+        self._body(
+            "text/plain; version=0.0.4",
+            prometheus_exposition(self.server.registry).encode(),
+        )
+
+
+class _JsonApiHandler(_MetricsHandler):
+    def do_GET(self):
+        self._body(
+            "application/json",
+            json.dumps(self.server.registry.snapshot(), sort_keys=True).encode(),
+        )
+
+
+class PrometheusServer(HttpServer):
     """`prometheus` metrics: scrape endpoint over stdlib http.server."""
 
     def __init__(self, registry: MetricsRegistry, port: int = 0):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        reg = registry
-
-        class H(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_GET(self):
-                if self.path not in ("/metrics", "/"):
-                    self.send_response(404)
-                    self.end_headers()
-                    return
-                body = prometheus_exposition(reg).encode()
-                self.send_response(200)
-                self.send_header(
-                    "Content-Type", "text/plain; version=0.0.4"
-                )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        self._srv = ThreadingHTTPServer(("127.0.0.1", port), H)
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        self.registry = registry
+        super().__init__(_PrometheusHandler, ("127.0.0.1", port))
 
 
-class JsonApiServer(PrometheusServer):
+class JsonApiServer(HttpServer):
     """`json_api` metrics: the snapshot as JSON (debug endpoint)."""
 
     def __init__(self, registry: MetricsRegistry, port: int = 0):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-        reg = registry
-
-        class H(BaseHTTPRequestHandler):
-            def log_message(self, *a):
-                pass
-
-            def do_GET(self):
-                body = json.dumps(reg.snapshot(), sort_keys=True).encode()
-                self.send_response(200)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-        self._srv = ThreadingHTTPServer(("127.0.0.1", port), H)
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
+        self.registry = registry
+        super().__init__(_JsonApiHandler, ("127.0.0.1", port))
 
 
 def statsd_flush(reg: MetricsRegistry, host: str, port: int) -> int:

@@ -12,10 +12,12 @@ Spark-first shape, sized for 100 TB:
   ship to executors inside the assignment closure (no join, no
   broadcast table);
 * assignment is an Arrow-batched vectorized distance kernel (the MLlib
-  broadcast-centers + BLAS shape); each Lloyd iteration is ONE scan:
-  assign + a narrow per-(cluster, dim) partial ``avg`` aggregate
-  (map-side combine reduces every partition to k*dim rows before the
-  shuffle);
+  broadcast-centers + BLAS shape); each Lloyd iteration is one job over
+  the id-range-spread input (``range_spread``: its range exchange and
+  sampling pass re-run for the init collect and for every iteration's
+  collect, since shuffle reuse does not span actions): assign + a
+  narrow per-(cluster, dim) partial ``avg`` aggregate (map-side combine
+  reduces every partition to k*dim rows before the shuffle);
 * distances fold over dims sequentially, bit-identical to the DuckDB
   oracle's ``list_reduce`` fold, so the iterative algorithm is
   hash-checkable end-to-end;
@@ -29,6 +31,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def assign_clusters(
@@ -244,23 +247,32 @@ def semdedup(
     # nrm_a*nrm_b product, so every pair's cosine and threshold compare
     # are bit-identical to the expression form (equality verified over
     # 4 SFs x 5 thresholds incl. 1722-id non-empty sets).
+    #
+    # Zero-norm rows: 0/0 is NaN here and NaN >= thr is False, so a
+    # zero vector dominates nothing and is never dominated. The DuckDB
+    # twin agrees: its 0.0/0.0 is NULL, and NULL >= thr drops the pair.
     thr = float(threshold)
 
     def _dominated(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
+        ids = pdf["id"].to_numpy()
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
         nrm = pdf["nrm"].to_numpy(dtype=np.float64)
         acc = np.multiply.outer(mat[:, 0], mat[:, 0])
         for i in range(1, mat.shape[1]):
             acc += np.multiply.outer(mat[:, i], mat[:, i])
-        cos = acc / np.multiply.outer(nrm, nrm)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = acc / np.multiply.outer(nrm, nrm)
         lt = ids[:, None] < ids[None, :]
         return pd.DataFrame({"id": ids[np.unique(np.nonzero((cos >= thr) & lt)[1])]})
 
     # ids are unique per cluster row and clusters partition the ids, so
     # the union of per-cluster outputs is already duplicate-free (the
-    # old pair join needed a distinct; this shape does not)
-    dominated = e.groupBy("cluster").applyInPandas(_dominated, "id bigint")
+    # old pair join needed a distinct; this shape does not). Any
+    # orderable id type: the kernel compares the ids as the column's own
+    # numpy values and returns them under the column's Spark type.
+    dominated = e.groupBy("cluster").applyInPandas(
+        _dominated, T.StructType([T.StructField("id", df.schema[id_col].dataType)])
+    )
     return (
         e.join(dominated.withColumn("__dom", F.lit(True)), "id", "left")
         .select(
@@ -281,9 +293,10 @@ def semdedup_sql(
     from bento_spark.functions.vectors import cosine_sql
 
     base = kmeans_sql(table, id_col, vec_col, dim=dim, k=k, iters=iters)
-    # reuse kmeans_sql's WITH-chain: strip its final SELECT (the block
-    # starting "SELECT id AS <id_col>"), keep the CTEs
-    cut = base.index(f"SELECT id AS {id_col}")
+    # reuse kmeans_sql's WITH-chain: strip its final SELECT (the last
+    # block starting "SELECT id AS <id_col>"; with id_col "id" the `e`
+    # CTE starts the same way), keep the CTEs
+    cut = base.rindex(f"SELECT id AS {id_col}")
     with_part = base[:cut].rstrip().rstrip(",") + ","
     # the final assignment CTE name is a{iters-1}... the final SELECT in
     # kmeans_sql re-derives from c{iters}; mirror that derivation here

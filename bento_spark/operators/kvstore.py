@@ -552,7 +552,10 @@ def kv_enrich(
         # under heavy host load fails the whole query at local
         # maxFailures=1) is safely retried on a FRESH client — the old
         # socket is desynced after a mid-reply reset. Same rationale as
-        # the kafka source's fetch retry (sources/kafka_source.py).
+        # the kafka source's fetch retry (sources/kafka_source.py). Only
+        # connection failures are retried; any other OSError (a refused
+        # permission, a missing file) is not transient and surfaces at
+        # once.
         retries = 3
         try:
             for pdf in batches:
@@ -561,7 +564,7 @@ def kv_enrich(
                     try:
                         vals = client.mget(keys)
                         break
-                    except (ConnectionError, OSError):
+                    except (ConnectionError, TimeoutError):
                         if retries == 0:
                             raise
                         retries -= 1

@@ -15,8 +15,9 @@ its playground assets; the API surface is what tooling drives)."""
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
+
+from bento_spark.serving import HttpServer
 
 _PAGE = b"""<!doctype html><title>bento_spark blobl playground</title>
 <body><p>POST /execute {"mapping": "...", "input": "..."} &rarr;
@@ -90,19 +91,8 @@ class _Handler(BaseHTTPRequestHandler):
         ))
 
 
-class BloblServer(ThreadingHTTPServer):
+class BloblServer(HttpServer):
     """In-process playground server; `port` is bound at construction."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        super().__init__((host, port), _Handler)
-        self._thread = threading.Thread(target=self.serve_forever,
-                                        daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler, (host, port))

@@ -16,9 +16,10 @@ from __future__ import annotations
 import json
 import threading
 import time
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 from bento_spark.plans.pipeline import build_pipeline
+from bento_spark.serving import HttpServer
 
 
 class StreamError(ValueError):
@@ -205,21 +206,9 @@ class _Handler(BaseHTTPRequestHandler):
     do_GET = do_POST = do_PUT = do_DELETE = _route
 
 
-class StreamsApiServer(ThreadingHTTPServer):
+class StreamsApiServer(HttpServer):
     """The reference's streams-mode REST surface on stdlib http."""
 
-    daemon_threads = True
-    allow_reuse_address = True
-
     def __init__(self, manager: StreamManager):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.manager = manager
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)

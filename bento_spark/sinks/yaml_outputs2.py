@@ -267,17 +267,16 @@ def _http_server_sink(df: DataFrame, is_streaming: bool, conf: dict):
     server streams the files to clients at `path` — the reference's
     fetch-my-results mode. The server handle rides the module registry
     (`HTTP_SERVER_SINKS`) keyed by path so tests/operators can stop
-    it."""
+    it. A re-run on the same path stops the server it replaces."""
     import glob
-    import json as _json
     import os
     import tempfile
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    from http.server import BaseHTTPRequestHandler
 
     from pyspark.sql import functions as F
 
     from bento_spark.operators.envelope import data_cols
+    from bento_spark.serving import HttpServer
 
     if is_streaming:
         raise ValueError(
@@ -311,12 +310,12 @@ def _http_server_sink(df: DataFrame, is_streaming: bool, conf: dict):
             self.end_headers()
             self.wfile.write(body)
 
-    srv = ThreadingHTTPServer(
-        (conf.get("host", "127.0.0.1"), int(conf.get("port", 0))), Handler
+    previous = HTTP_SERVER_SINKS.pop(path, None)
+    if previous is not None:  # a re-run replaces the server on its path
+        previous.stop()
+    HTTP_SERVER_SINKS[path] = HttpServer(
+        Handler, (conf.get("host", "127.0.0.1"), int(conf.get("port", 0)))
     )
-    srv.daemon_threads = True
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    HTTP_SERVER_SINKS[path] = srv
     return None
 
 

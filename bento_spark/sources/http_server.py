@@ -13,12 +13,12 @@ directory (sources/pydatasource.py).
 
 Both servers are pure stdlib:
 
-* ``HttpIngestServer`` — ThreadingHTTPServer; each POST body becomes
+* ``HttpIngestServer`` — an ``HttpServer``; each POST body becomes
   one staged message (or N, with ``split_lines``); request path and
   selected headers land in the envelope metadata the way the
   reference stamps http_server metadata fields.
-* ``WebSocketIngestServer`` — a from-scratch RFC 6455 server over
-  socketserver: real opening handshake (Sec-WebSocket-Accept =
+* ``WebSocketIngestServer`` — a from-scratch RFC 6455 server over a
+  ``TcpServer``: real opening handshake (Sec-WebSocket-Accept =
   b64(sha1(key + GUID))), client-to-server frame parse with the
   mandatory masking, 7/16/64-bit payload lengths, fragmented
   continuation frames, ping->pong, close handshake. Text/binary
@@ -36,9 +36,12 @@ import base64
 import hashlib
 import json
 import os
+import socketserver
 import struct
-import threading
 import uuid
+from http.server import BaseHTTPRequestHandler
+
+from bento_spark.serving import HttpServer, TcpServer
 
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -64,7 +67,7 @@ def _stage(out_dir: str, records: list[dict]) -> str:
     return final
 
 
-class HttpIngestServer:
+class HttpIngestServer(HttpServer):
     """POST-to-staging bridge. 200 is sent only AFTER the body is
     durably staged; a crash before the rename leaves nothing partial
     and the producer retries (at-least-once)."""
@@ -78,8 +81,6 @@ class HttpIngestServer:
         split_lines: bool = False,
         meta_headers: tuple[str, ...] = ("Content-Type",),
     ):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
         bridge = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -124,27 +125,15 @@ class HttpIngestServer:
         self.split_lines = split_lines
         self.meta_headers = meta_headers
         self.received = 0
-        self._srv = ThreadingHTTPServer((host, port), Handler)
-        self._srv.daemon_threads = True
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        super().__init__(Handler, (host, port))
 
 
-class WebSocketIngestServer:
+class WebSocketIngestServer(TcpServer):
     """RFC 6455 server staging every received text/binary message. Frames
     from clients MUST be masked (§5.1) — unmasked frames close the
     connection with status 1002 as the spec requires."""
 
     def __init__(self, out_dir: str, host: str = "127.0.0.1", port: int = 0):
-        import socketserver
-
         bridge = self
 
         class Handler(socketserver.StreamRequestHandler):
@@ -237,25 +226,12 @@ class WebSocketIngestServer:
             def _close(self, status: int):
                 self._send_frame(0x8, struct.pack(">H", status))
 
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
         self.out_dir = out_dir
         self.received = 0
-        self._srv = Server((host, port), Handler)
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        super().__init__(Handler, (host, port))
 
 
-class SyncResponseServer:
+class SyncResponseServer(HttpServer):
     """`http_server` (sync mode) + `sync_response` output
     (internal/impl/pure/processor_sync_response.go:14,
     input_http_server.go's sync_response wiring): the HTTP response IS
@@ -271,8 +247,6 @@ class SyncResponseServer:
 
     def __init__(self, spark, processors: list[dict],
                  host: str = "127.0.0.1", port: int = 0):
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
         from bento_spark.operators.envelope import ERROR, META, ensure_envelope
         from bento_spark.plans.pipeline import PROCESSORS
 
@@ -280,8 +254,6 @@ class SyncResponseServer:
             (pname, _), = proc.items()
             if pname not in PROCESSORS:
                 raise ValueError(f"unknown processor {pname!r}")
-
-        outer = self
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, *a):
@@ -344,16 +316,7 @@ class SyncResponseServer:
                 self.end_headers()
                 self.wfile.write(data)
 
-        self._srv = ThreadingHTTPServer((host, port), Handler)
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
+        super().__init__(Handler, (host, port))
 
 
 class WebSocketClient:

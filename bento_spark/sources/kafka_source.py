@@ -69,14 +69,15 @@ def _read_range(part: _Range):
     # whole streaming query at local maxFailures=1) is safely retried
     # by reconnecting and re-fetching from the current cursor — the
     # cursor only advances past yielded records, so no record is
-    # skipped or duplicated.
+    # skipped or duplicated. Only connection failures are retried; any
+    # other OSError is not transient and surfaces at once.
     retries = 3
     try:
         offset = part.start
         while offset < part.end:
             try:
                 records, hw = client.fetch(part.topic, part.partition, offset)
-            except (ConnectionError, OSError):
+            except (ConnectionError, TimeoutError):
                 if retries == 0:
                     raise
                 retries -= 1
@@ -122,7 +123,7 @@ class _Common:
             return {
                 str(p): client.list_offsets(self.topic, p, ts) for p in pids
             }
-        except (ConnectionError, OSError):
+        except (ConnectionError, TimeoutError):
             fresh = self._client()
             try:
                 return {

@@ -26,6 +26,8 @@ import socketserver
 import threading
 import time
 
+from bento_spark.serving import TcpServer
+
 
 def _stage(out_dir: str, prefix: str, seq: int, lines: list[str]) -> None:
     os.makedirs(out_dir, exist_ok=True)
@@ -80,10 +82,11 @@ def socket_drain(
     return total
 
 
-class SocketIngestServer:
+class SocketIngestServer(TcpServer):
     """``socket_server`` input: accept line-framed TCP connections and
     stage each connection's messages durably on arrival. ``stop()``
-    drains accepted connections before returning."""
+    stops accepting; a connection already accepted keeps staging on
+    its own daemon thread until its client closes."""
 
     def __init__(self, out_dir: str, host: str = "127.0.0.1",
                  port: int = 0):
@@ -108,27 +111,12 @@ class SocketIngestServer:
         self.out_dir = out_dir
         self._seq = 0
         self._lock = threading.Lock()
-        self._srv = socketserver.ThreadingTCPServer(
-            (host, port), Handler
-        )
-        self._srv.daemon_threads = True
-        self._thread = threading.Thread(
-            target=self._srv.serve_forever, daemon=True
-        )
-        self._thread.start()
+        super().__init__(Handler, (host, port))
 
     def _flush(self, lines: list[str]) -> None:
         with self._lock:
             self._seq += 1
             _stage(self.out_dir, "socket-server", self._seq, lines)
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
 
 
 def stdin_drain(

@@ -9,32 +9,12 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
+
+from bento_spark.serving import HttpServer
 
 
-class _JsonServer(ThreadingHTTPServer):
-    daemon_threads = True
-    allow_reuse_address = True
-
-    def __init__(self, handler):
-        super().__init__(("127.0.0.1", 0), handler)
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    @property
-    def url(self) -> str:
-        return f"http://127.0.0.1:{self.port}"
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
-
-
-class InProcessBsrServer(_JsonServer):
+class InProcessBsrServer(HttpServer):
     """Serves one FileDescriptorSet (proto-JSON) per known module."""
 
     def __init__(self, modules: dict[str, dict]):
@@ -67,7 +47,7 @@ class InProcessBsrServer(_JsonServer):
         super().__init__(_H)
 
 
-class InProcessSchemaRegistry(_JsonServer):
+class InProcessSchemaRegistry(HttpServer):
     """Confluent-wire subset: GET /schemas/ids/{id} -> {"schema": "..."}."""
 
     def __init__(self, schemas: dict[int, dict]):

@@ -1,4 +1,4 @@
-"""In-process HTTP echo server (stdlib ThreadingHTTPServer): responds
+"""In-process HTTP echo server (``bento_spark.serving``): responds
 to any request with the deterministic JSON envelope
 ``{"len": <body bytes>, "method": <verb>, "path": <request path>}``.
 
@@ -10,8 +10,9 @@ the production urllib transport instead of an injected fake.
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
+
+from bento_spark.serving import HttpServer
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -34,23 +35,6 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
 
-class InProcessHttpEcho(ThreadingHTTPServer):
-    daemon_threads = True
-    allow_reuse_address = True
-    # the enrichment pool connects from every task at once (32 tasks x
-    # 8 threads after the r12 parallelism spread); socketserver's
-    # default listen backlog of 5 refuses the burst outright (connection
-    # errors + seconds of TCP SYN retransmit stalls)
-    request_queue_size = 1024
-
+class InProcessHttpEcho(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)

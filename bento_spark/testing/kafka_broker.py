@@ -18,6 +18,7 @@ import struct
 import threading
 
 from bento_spark.operators.kafka_wire import crc32c, zigzag_decode
+from bento_spark.serving import TcpServer
 
 
 def parse_record_batch(buf: bytes) -> list[tuple[bytes | None, bytes]]:
@@ -130,7 +131,7 @@ class _Handler(socketserver.StreamRequestHandler):
             _cid, pos = _rd_str(req, 8)
             if api == 3:  # Metadata v0
                 body = struct.pack(">ii", 1, 1) + _enc_str("127.0.0.1") + struct.pack(
-                    ">i", srv.server_address[1]
+                    ">i", srv.port
                 )
                 parts = b""
                 for p in range(srv.n_partitions):
@@ -223,28 +224,12 @@ class _Handler(socketserver.StreamRequestHandler):
         self.wfile.flush()
 
 
-class InProcessKafkaBroker(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-    # concurrent short-lived client connections (one per reader task per
-    # micro-batch + producers) can exceed the socketserver default
-    # backlog of 5 under load, surfacing as spurious "connection closed"
-    request_queue_size = 64
-
+class InProcessKafkaBroker(TcpServer):
     def __init__(self, topic="t1", n_partitions=3):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.topic = topic
         self.n_partitions = n_partitions
         self.log: dict[int, list] = {}
         self.log_lock = threading.Lock()
         self.error_script: list[int] = []
         self.fetch_page = 1000  # records per Fetch response
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)

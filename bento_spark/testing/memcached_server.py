@@ -6,7 +6,8 @@ wire-protocol tests and the processor-docs sweep's runnable
 from __future__ import annotations
 
 import socketserver
-import threading
+
+from bento_spark.serving import TcpServer
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -56,23 +57,8 @@ class _Handler(socketserver.StreamRequestHandler):
                 self.wfile.flush()
 
 
-class InProcessMemcachedServer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-    # survive a 32-worker connection burst (default backlog of 5 resets
-    # the overflow under load — see resp_server.py / kafka_broker.py)
-    request_queue_size = 64
-
+class InProcessMemcachedServer(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.data: dict[str, str] = {}
         self.reject_sets = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)

@@ -19,6 +19,7 @@ import threading
 import time
 
 from bento_spark.operators.pgwire import scram_salted_password
+from bento_spark.serving import TcpServer
 
 
 USER, PASSWORD, DB = "svc", "s3cret-pw", "app"
@@ -168,27 +169,15 @@ class _Handler(socketserver.StreamRequestHandler):
             self._send(b"Z", b"I")
 
 
-class InProcessPgServer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-    # survive a 32-worker connection burst (default backlog of 5 resets
-    # the overflow under load — see resp_server.py / kafka_broker.py)
-    request_queue_size = 64
-
+class InProcessPgServer(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.db = sqlite3.connect(":memory:", check_same_thread=False)
         self.lock = threading.Lock()
         self.feed_rows: list[tuple] = []  # changefeed events
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
+        super().__init__(_Handler)
 
     def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().stop()
         self.db.close()
 
 

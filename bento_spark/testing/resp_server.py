@@ -9,7 +9,8 @@ path runs inside the correctness gate)."""
 from __future__ import annotations
 
 import socketserver
-import threading
+
+from bento_spark.serving import TcpServer
 
 
 def _bulk(s: str | None) -> bytes:
@@ -130,32 +131,13 @@ class _Handler(socketserver.StreamRequestHandler):
                 self._send(b"-ERR unknown command '%s'\r\n" % name.encode())
 
 
-class InProcessRespServer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-    # 32 Arrow workers open their per-partition clients in one burst;
-    # socketserver's default listen backlog of 5 resets the overflow
-    # under host load (same fix as kafka_broker.py / http_echo.py —
-    # observed as a ConnectionResetError in proc_kv_enrich's MGET at
-    # the sf1 gate)
-    request_queue_size = 64
-
+class InProcessRespServer(TcpServer):
     def __init__(self, password: str | None = None, dribble: bool = False):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.password = password
         self.dribble = dribble
         self.data: dict[int, dict[str, str]] = {}
         self.scripts: dict[str, str] = {}
         self.expires: dict[str, int] = {}
-        self._thread = threading.Thread(target=self.serve_forever, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -33,6 +32,7 @@ from bento_spark.operators.amqp1_wire import (
     encode,
     encode_frame,
 )
+from bento_spark.serving import TcpServer
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -130,34 +130,21 @@ class _Handler(socketserver.StreamRequestHandler):
                 return
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
-    def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
+class _Server(TcpServer):
+    def __init__(self, handler=_Handler):
         self.queues: dict[str, list[bytes]] = {}
         self.settled: list[int] = []
         self.reject_payloads: set[bytes] = set()
         self.credit = 1000
         self.coalesce = 1  # dispositions per frame (range size)
         self.container = ""
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_type_codec_roundtrip():
@@ -281,24 +268,12 @@ class _SaslHandler(_Handler):
 
 
 def test_sasl_plain_then_amqp():
-    srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _SaslHandler)
-    srv.allow_reuse_address = True
-    srv.daemon_threads = True
-    srv.queues, srv.settled = {}, []
-    srv.reject_payloads, srv.credit, srv.coalesce = set(), 100, 1
-    srv.container = ""
-    srv.sasl_user, srv.sasl_pass = "svc", "pw!"
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        c = Amqp1Client("127.0.0.1", srv.server_address[1],
-                        user="svc", password="pw!")
+    with _Server(_SaslHandler) as srv:
+        srv.sasl_user, srv.sasl_pass = "svc", "pw!"
+        c = Amqp1Client("127.0.0.1", srv.port, user="svc", password="pw!")
         c.attach_sender("q")
         c.send([b"authed"])
         assert srv.queues["q"] == [b"authed"]
         c.close()
         with pytest.raises((Amqp1Error, ConnectionError)):
-            Amqp1Client("127.0.0.1", srv.server_address[1],
-                        user="svc", password="wrong")
-    finally:
-        srv.shutdown()
-        srv.server_close()
+            Amqp1Client("127.0.0.1", srv.port, user="svc", password="wrong")

@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -47,6 +46,7 @@ from bento_spark.operators.amqp_wire import (
     longstr,
     shortstr,
 )
+from bento_spark.serving import TcpServer
 
 
 def test_field_table_roundtrip():
@@ -223,12 +223,8 @@ class _Handler(socketserver.StreamRequestHandler):
                 return
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self, frame_max=131072):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.queues: dict[str, list[bytes]] = {}
         self.delivered: dict[str, set] = {}
         self.tag_map: dict[int, tuple] = {}
@@ -237,22 +233,13 @@ class _Server(socketserver.ThreadingTCPServer):
         self.frame_max = frame_max
         self.ack_batch = 1
         self.nack_tags: set[int] = set()
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_handshake_declare_publish_confirms(server):

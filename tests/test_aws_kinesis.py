@@ -13,13 +13,13 @@ from __future__ import annotations
 import base64
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qsl
 
 import pytest
 
 from bento_spark.functions.awsauth import sign_request
+from bento_spark.serving import HttpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 from bento_spark.sources.aws_kinesis import (
     KinesisBridge,
@@ -150,30 +150,20 @@ class _Handler(BaseHTTPRequestHandler):
         return shard, int(idx)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.shards: dict[str, list[bytes]] = {}
         self.firehose: list[bytes] = []
         self.sns_messages: list[tuple[str, str]] = []
         self.put_calls: list[int] = []
         self.throttle_once = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _client(server) -> KinesisClient:

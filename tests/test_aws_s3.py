@@ -8,13 +8,13 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qsl, urlparse
 
 import pytest
 
 from bento_spark.functions.awsauth import sign_request
+from bento_spark.serving import HttpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 from bento_spark.sources.aws_s3 import S3Bridge, S3Client, S3Error
 
@@ -169,29 +169,19 @@ class _Handler(BaseHTTPRequestHandler):
         return self._reply(400, b"<Error>BadRequest</Error>")
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.objects: dict[str, dict[str, bytes]] = {}
         self.uploads: dict[str, dict] = {}
         self.aborted: list[str] = []
         self.fail_500_once = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _client(server) -> S3Client:

@@ -8,8 +8,7 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
@@ -19,6 +18,7 @@ from bento_spark.operators.awssvc import (
     dynamodb_partiql,
     lambda_invoke_enrich,
 )
+from bento_spark.serving import HttpServer
 
 SECRET = "svc-secret"
 ACCESS = "AKIASVC"
@@ -100,27 +100,17 @@ class _Handler(BaseHTTPRequestHandler):
         return self._send(404, b"{}")
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.calls: list = []
         self.partiql_batches: list[int] = []
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def endpoint(self):
-        return f"http://127.0.0.1:{self.server_address[1]}"
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 CREDS = dict(region=REGION, access_key=ACCESS, secret_key=SECRET)
@@ -129,7 +119,7 @@ CREDS = dict(region=REGION, access_key=ACCESS, secret_key=SECRET)
 def test_lambda_invoke_enrich(spark, server):
     df = spark.range(6).selectExpr("id", "to_json(named_struct('x', id)) AS body")
     out = lambda_invoke_enrich(
-        df, server.endpoint, "fn-test", "body", "res", **CREDS
+        df, server.url, "fn-test", "body", "res", **CREDS
     ).collect()
     got = {r["id"]: json.loads(r["res"])["doubled"] for r in out}
     assert got == {i: 2 * i for i in range(6)}
@@ -143,7 +133,7 @@ def test_lambda_function_error_flags_row(spark, server):
         [(1, '{"x": 1}'), (2, '{"x": 2, "explode": true}')], "id long, body string"
     )
     rows = {r["id"]: r for r in lambda_invoke_enrich(
-        df, server.endpoint, "fn", "body", "res", **CREDS
+        df, server.url, "fn", "body", "res", **CREDS
     ).collect()}
     assert json.loads(rows[1]["res"])["doubled"] == 2 and rows[1]["_error"] is None
     assert rows[2]["res"] is None
@@ -156,7 +146,7 @@ def test_dynamodb_partiql_batches_and_errors(spark, server):
         "id", "CASE WHEN id = 7 THEN 'err' ELSE concat('k', id) END AS key"
     )
     out = dynamodb_partiql(
-        df, server.endpoint,
+        df, server.url,
         'SELECT * FROM "t" WHERE k = ?', ["key"], "items", **CREDS,
     ).collect()
     rows = {r["id"]: r for r in out}
@@ -170,7 +160,7 @@ def test_bedrock_invoke(spark, server):
         "id", "to_json(named_struct('prompt', concat('p', id))) AS body"
     )
     out = bedrock_invoke_enrich(
-        df, server.endpoint, "anthropic.claude-v2", "body", "resp", **CREDS
+        df, server.url, "anthropic.claude-v2", "body", "resp", **CREDS
     ).collect()
     got = {r["id"]: json.loads(r["resp"])["completion"] for r in out}
     assert got == {i: f"echo:p{i}" for i in range(4)}
@@ -184,6 +174,6 @@ def test_pipeline_registration(spark, server):
 
     df = spark.range(2).selectExpr("to_json(named_struct('x', id)) AS content")
     out = PROCESSORS["aws_lambda"](
-        df, {"endpoint": server.endpoint, "function": "f", **CREDS}
+        df, {"endpoint": server.url, "function": "f", **CREDS}
     ).collect()
     assert all(r["lambda_result"] for r in out)

@@ -9,13 +9,13 @@ from __future__ import annotations
 import base64
 import json
 import re
-import threading
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
 from bento_spark.functions.azureauth import sign_request
+from bento_spark.serving import HttpServer
 from bento_spark.sources.azure_queue import AzureQueueClient
 
 ACCOUNT = "testacct"
@@ -101,29 +101,19 @@ class _Handler(BaseHTTPRequestHandler):
         self._xml(204, b"")
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.queue: dict[str, str] = {}
         self.invisible: set[str] = set()
         self.fail_deletes = 0
         self.fail_puts = 0
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _client(server):

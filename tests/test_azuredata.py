@@ -5,8 +5,7 @@ cosmos master-key token, service-bus SAS)."""
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qs, unquote, urlparse
 
 import pytest
@@ -21,6 +20,7 @@ from bento_spark.operators.azuredata import (
     table_shared_key,
     table_storage_df,
 )
+from bento_spark.serving import HttpServer
 
 ACCOUNT = "testacct"
 KEY_B64 = "dGVzdC1rZXktYnl0ZXM="  # b64("test-key-bytes")
@@ -178,45 +178,33 @@ class _SbusHandler(BaseHTTPRequestHandler):
 
 
 def _mk_server(handler, **attrs):
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
-    for k, v in attrs.items():
-        setattr(srv, k, v)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    srv = HttpServer(handler)
+    vars(srv).update(attrs)
     return srv
 
 
 @pytest.fixture()
 def table_server():
-    srv = _mk_server(_TableHandler, entities={})
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with _mk_server(_TableHandler, entities={}) as srv:
+        yield srv
 
 
 @pytest.fixture()
 def cosmos_server():
-    srv = _mk_server(_CosmosHandler, docs={}, queries=[])
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with _mk_server(_CosmosHandler, docs={}, queries=[]) as srv:
+        yield srv
 
 
 @pytest.fixture()
 def sbus_server():
-    srv = _mk_server(_SbusHandler, queue=[], locks={}, completed=[])
-    yield srv
-    srv.shutdown()
-    srv.server_close()
-
-
-def _ep(srv):
-    return f"http://127.0.0.1:{srv.server_address[1]}"
+    with _mk_server(_SbusHandler, queue=[], locks={}, completed=[]) as srv:
+        yield srv
 
 
 # ---- Table Storage --------------------------------------------------------
 
 def test_table_upsert_and_paged_query(table_server):
-    c = AzureTableClient(_ep(table_server), ACCOUNT, KEY_B64, "people")
+    c = AzureTableClient(table_server.url, ACCOUNT, KEY_B64, "people")
     for i in range(5):
         c.upsert_entity(
             {"PartitionKey": "p", "RowKey": f"r{i}", "name": f"n{i}"}
@@ -229,20 +217,20 @@ def test_table_upsert_and_paged_query(table_server):
 
 def test_table_bad_key_rejected(table_server):
     c = AzureTableClient(
-        _ep(table_server), ACCOUNT, "d3JvbmctYnl0ZXM=", "people"
+        table_server.url, ACCOUNT, "d3JvbmctYnl0ZXM=", "people"
     )
     with pytest.raises(RuntimeError, match="HTTP 403"):
         c.upsert_entity({"PartitionKey": "p", "RowKey": "r"})
 
 
 def test_table_storage_input_df(spark, table_server):
-    c = AzureTableClient(_ep(table_server), ACCOUNT, KEY_B64, "dims")
+    c = AzureTableClient(table_server.url, ACCOUNT, KEY_B64, "dims")
     for i in range(3):
         c.upsert_entity(
             {"PartitionKey": "d", "RowKey": str(i), "label": f"L{i}"}
         )
     df = table_storage_df(spark, {
-        "endpoint": _ep(table_server), "account": ACCOUNT,
+        "endpoint": table_server.url, "account": ACCOUNT,
         "key": KEY_B64, "table": "dims",
     })
     assert df.count() == 3 and "label" in df.columns
@@ -257,7 +245,7 @@ def test_table_sink_transport(spark, table_server):
     stats = deliver(
         df, "azure_table_storage",
         {
-            "endpoint": _ep(table_server), "account": ACCOUNT, "key": KEY_B64,
+            "endpoint": table_server.url, "account": ACCOUNT, "key": KEY_B64,
             "table": "t", "partition_key_field": "part", "row_key_field": "rid",
         },
         batch_size=2,
@@ -269,7 +257,7 @@ def test_table_sink_transport(spark, table_server):
 # ---- Cosmos DB ------------------------------------------------------------
 
 def test_cosmos_upsert_query_roundtrip(cosmos_server):
-    c = CosmosClient(_ep(cosmos_server), KEY_B64, "db1", "coll1")
+    c = CosmosClient(cosmos_server.url, KEY_B64, "db1", "coll1")
     for i in range(5):
         c.upsert_document({"id": f"d{i}", "v": i}, f"d{i}")
     got = c.query_documents("SELECT * FROM c")  # continuation-paged
@@ -282,20 +270,20 @@ def test_cosmos_upsert_query_roundtrip(cosmos_server):
 
 
 def test_cosmos_bad_key_rejected(cosmos_server):
-    c = CosmosClient(_ep(cosmos_server), "d3JvbmctYnl0ZXM=", "db1", "coll1")
+    c = CosmosClient(cosmos_server.url, "d3JvbmctYnl0ZXM=", "db1", "coll1")
     with pytest.raises(RuntimeError, match="HTTP 403"):
         c.query_documents("SELECT * FROM c")
 
 
 def test_cosmos_processor_and_registration(spark, cosmos_server):
-    src = CosmosClient(_ep(cosmos_server), KEY_B64, "db1", "coll1")
+    src = CosmosClient(cosmos_server.url, KEY_B64, "db1", "coll1")
     for i in range(3):
         src.upsert_document({"id": f"u{i}", "score": 10 * i}, f"u{i}")
     from bento_spark.plans.pipeline import PROCESSORS
 
     df = spark.range(3).selectExpr("concat('u', id) AS uid")
     out = PROCESSORS["azure_cosmosdb"](df, {
-        "endpoint": _ep(cosmos_server), "key": KEY_B64,
+        "endpoint": cosmos_server.url, "key": KEY_B64,
         "database": "db1", "container": "coll1",
         "query": "SELECT * FROM c WHERE c.id = @id",
         "args": {"@id": "uid"},
@@ -313,7 +301,7 @@ def test_cosmos_sink_transport(spark, cosmos_server):
     stats = deliver(
         df, "azure_cosmosdb",
         {
-            "endpoint": _ep(cosmos_server), "key": KEY_B64,
+            "endpoint": cosmos_server.url, "key": KEY_B64,
             "database": "db1", "container": "coll1",
         },
         batch_size=2,
@@ -326,7 +314,7 @@ def test_cosmos_sink_transport(spark, cosmos_server):
 
 def test_sbus_receive_complete_drain(sbus_server, tmp_path):
     sbus_server.queue = [(f"m{i}", f"body-{i}".encode()) for i in range(4)]
-    c = ServiceBusQueueClient(_ep(sbus_server), "q1", SB_KEY_NAME, SB_KEY)
+    c = ServiceBusQueueClient(sbus_server.url, "q1", SB_KEY_NAME, SB_KEY)
     n = c.drain_to_dir(str(tmp_path))
     assert n == 4
     assert sbus_server.completed == [f"m{i}" for i in range(4)]
@@ -336,11 +324,11 @@ def test_sbus_receive_complete_drain(sbus_server, tmp_path):
 
 
 def test_sbus_empty_queue_returns_none(sbus_server):
-    c = ServiceBusQueueClient(_ep(sbus_server), "q1", SB_KEY_NAME, SB_KEY)
+    c = ServiceBusQueueClient(sbus_server.url, "q1", SB_KEY_NAME, SB_KEY)
     assert c.receive() is None
 
 
 def test_sbus_bad_sas_rejected(sbus_server):
-    c = ServiceBusQueueClient(_ep(sbus_server), "q1", SB_KEY_NAME, "wrong")
+    c = ServiceBusQueueClient(sbus_server.url, "q1", SB_KEY_NAME, "wrong")
     with pytest.raises(RuntimeError, match="HTTP 401"):
         c.receive()

@@ -7,11 +7,11 @@ from __future__ import annotations
 
 import json
 import socketserver
-import threading
 
 import pytest
 
 from bento_spark.operators.beanstalk_wire import BeanstalkClient, BeanstalkError
+from bento_spark.serving import TcpServer
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -82,36 +82,23 @@ class _Handler(socketserver.StreamRequestHandler):
                 return
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.tubes: dict[str, list[dict]] = {}
         self.next_id = 0
         self.job_limit = 0
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
+        super().__init__(_Handler)
 
     def live_bodies(self, tube="default"):
         return [
             j["body"] for j in self.tubes.get(tube, []) if not j.get("deleted")
         ]
 
-    def stop(self):
-        self.shutdown()
-        self.server_close()
-
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_put_binary_safe_and_tubes(server):

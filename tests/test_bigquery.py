@@ -6,11 +6,11 @@ pageToken pagination, and the sink transport through deliver()."""
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
+from bento_spark.serving import HttpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 from bento_spark.sources.gcp_bigquery import (
     BigQueryClient,
@@ -83,9 +83,8 @@ class _Handler(BaseHTTPRequestHandler):
         return self._json({"error": "unknown"}, 404)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.rows: list[dict] = []
         self.seen_ids: set[str] = set()
         self.queries: list[str] = []
@@ -105,22 +104,13 @@ class _Server(ThreadingHTTPServer):
             {"f": [{"v": "4"}, {"v": "d"}, {"v": "2.0"}, {"v": "false"}]},
             {"f": [{"v": "5"}, {"v": "e"}, {"v": "3.5"}, {"v": "true"}]},
         ]
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def url(self):
-        return f"http://127.0.0.1:{self.server_address[1]}"
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_query_typed_decode_with_pagination(server):

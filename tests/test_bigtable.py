@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -31,6 +30,7 @@ from bento_spark.operators.grpc_wire import (
     encode_h2_frame,
 )
 from bento_spark.operators.protobuf import pb_decode, pb_encode
+from bento_spark.serving import TcpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 
 
@@ -144,30 +144,17 @@ class _Handler(socketserver.StreamRequestHandler):
                             stream, _lit("grpc-status", "0"))
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.tables: dict[str, list] = {}
         self.fail_keys: dict[bytes, tuple[int, str]] = {}
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 TABLE = "projects/p/instances/i/tables/events"

@@ -9,7 +9,6 @@ from __future__ import annotations
 import json
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -23,6 +22,7 @@ from bento_spark.operators.bolt_wire import (
     pack_struct,
     unpack,
 )
+from bento_spark.serving import TcpServer
 
 SUCCESS, RECORD, FAILURE = 0x70, 0x71, 0x7F
 
@@ -107,32 +107,19 @@ class _Handler(socketserver.StreamRequestHandler):
                 }))
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self, password="pw", chunk=7):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.password = password
         self.chunk = chunk  # tiny server->client chunks
         self.runs: list = []
         self.nodes: dict[str, dict] = {}
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_packstream_roundtrip():

@@ -52,9 +52,8 @@ PERSON_FDS = {
 
 @pytest.fixture()
 def bsr():
-    srv = InProcessBsrServer({"buf.build/exampleco/mymodule": PERSON_FDS})
-    yield srv
-    srv.stop()
+    with InProcessBsrServer({"buf.build/exampleco/mymodule": PERSON_FDS}) as srv:
+        yield srv
 
 
 def test_fetch_bsr_registry_schema(bsr):

@@ -9,7 +9,6 @@ from __future__ import annotations
 import json
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -30,6 +29,7 @@ from bento_spark.operators.couchbase_wire import (
     vbucket_id,
 )
 from bento_spark.operators.kvstore import _client_from_url
+from bento_spark.serving import TcpServer
 from bento_spark.sinks.connector import TRANSPORTS
 
 USER, PASS = "svc", "couch-secret"
@@ -107,30 +107,17 @@ class _Handler(socketserver.StreamRequestHandler):
                 self._respond(opcode, opaque, 0x0081)  # unknown command
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.data: dict[str, dict[str, bytes]] = {}
         self.tmpfail_once = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_vbucket_mapping_is_crc32_fold():

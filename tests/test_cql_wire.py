@@ -11,7 +11,6 @@ import json
 import re
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -26,6 +25,7 @@ from bento_spark.operators.cql_wire import (
     cassandra_rows,
     quote_literal,
 )
+from bento_spark.serving import TcpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 
 
@@ -143,12 +143,8 @@ class _Handler(socketserver.StreamRequestHandler):
             )
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.queries: list[tuple[str, int]] = []
         self.inserts: list[tuple[str, str, str]] = []
         self.cols = [
@@ -164,22 +160,13 @@ class _Server(socketserver.ThreadingTCPServer):
         ]
         self.global_spec = True
         self.error_code: int | None = None
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_select_decodes_all_types_global_spec(server):

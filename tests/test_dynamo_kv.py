@@ -12,13 +12,13 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
 from bento_spark.functions.awsauth import sign_request
 from bento_spark.operators.kvstore import DynamoKV, _client_from_url
+from bento_spark.serving import HttpServer
 
 SECRET = "test-secret-key"
 ACCESS = "AKIATEST"
@@ -111,30 +111,20 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(payload)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.data: dict[str, str] = {}
         self.get_batches: list[int] = []
         self.put_batches: list[int] = []
         self.defer_first_get = False
         self.defer_first_put = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _kv(server):

@@ -7,12 +7,12 @@ HTTP-level failures, and a Spark kv_enrich end-to-end over es:// URLs.
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
 from bento_spark.operators.kvstore import EsKV, _client_from_url
+from bento_spark.serving import HttpServer
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -66,29 +66,19 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(payload)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.data: dict[str, dict[str, str]] = {}
         self.mget_calls: list[int] = []
         self.reject_ids: set[str] = set()
         self.fail_http = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_bulk_then_mget_roundtrip_chunked(server):

@@ -8,12 +8,12 @@ from __future__ import annotations
 
 import base64
 import json
-import threading
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
+from bento_spark.serving import HttpServer
 from bento_spark.sources.gcp_pubsub import PubSubClient
 
 PROJECT = "proj1"
@@ -81,30 +81,20 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(payload)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.messages: dict[str, str] = {}
         self.outstanding: set[str] = set()
         self.required_token: str | None = None
         self.fail_publishes = 0
         self.fail_acks = 0
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _client(server, token=None):

@@ -6,11 +6,11 @@ heartbeat cursor advancement, and the stage-then-checkpoint drain."""
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
+from bento_spark.serving import HttpServer
 from bento_spark.sources.gcp_spanner import (
     SpannerChangeStreamClient,
     SpannerError,
@@ -77,22 +77,13 @@ class _Handler(BaseHTTPRequestHandler):
         return self._send({"error": "bad path"})
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.sessions: list[str] = []
         self.starts: list[str] = []
         self.records: list[tuple[str, dict]] = []
         self.expect_token = None
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def endpoint(self):
-        return f"http://127.0.0.1:{self.server_address[1]}"
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
@@ -109,7 +100,7 @@ def server():
 
 
 def test_read_change_stream_chunked(server):
-    c = SpannerChangeStreamClient(server.endpoint, DB)
+    c = SpannerChangeStreamClient(server.url, DB)
     events, cursor = c.read_change_stream(
         "userstream", "1970-01-01T00:00:00Z"
     )
@@ -119,7 +110,7 @@ def test_read_change_stream_chunked(server):
 
 
 def test_drain_checkpoints_cursor(server, tmp_path):
-    c = SpannerChangeStreamClient(server.endpoint, DB)
+    c = SpannerChangeStreamClient(server.url, DB)
     n = c.drain_to_dir("userstream", str(tmp_path))
     assert n == 2
     (f,) = tmp_path.glob("spanner-*.jsonl")
@@ -134,12 +125,12 @@ def test_drain_checkpoints_cursor(server, tmp_path):
 def test_bearer_token_sent_and_verified(server):
     server.expect_token = "tok-123"
     ok = SpannerChangeStreamClient(
-        server.endpoint, DB, token_provider=lambda: "tok-123"
+        server.url, DB, token_provider=lambda: "tok-123"
     )
     events, _ = ok.read_change_stream("userstream", "1970-01-01T00:00:00Z")
     assert len(events) == 2
     bad = SpannerChangeStreamClient(
-        server.endpoint, DB, token_provider=lambda: "wrong"
+        server.url, DB, token_provider=lambda: "wrong"
     )
     with pytest.raises(SpannerError, match="HTTP 401"):
         bad.read_change_stream("userstream", "1970-01-01T00:00:00Z")

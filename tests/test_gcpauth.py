@@ -9,9 +9,8 @@ from __future__ import annotations
 
 import base64
 import json
-import threading
 import urllib.parse
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
@@ -22,6 +21,7 @@ from bento_spark.functions.gcpauth import (
     service_account_token_provider,
 )
 from bento_spark.functions.rsa import generate_keypair, verify_rs256
+from bento_spark.serving import HttpServer
 
 KEY = generate_keypair(1024)  # module-level: one keygen for all tests
 
@@ -75,16 +75,13 @@ class _TokenHandler(BaseHTTPRequestHandler):
 
 @pytest.fixture
 def token_server():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _TokenHandler)
-    srv.key = KEY
-    srv.grants = 0
-    srv.expect_email = "svc@proj.iam.gserviceaccount.com"
-    srv.expect_scope = "https://www.googleapis.com/auth/pubsub"
-    srv.token_uri = f"http://127.0.0.1:{srv.server_address[1]}/token"
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield srv
-    srv.shutdown()
+    with HttpServer(_TokenHandler) as srv:
+        srv.key = KEY
+        srv.grants = 0
+        srv.expect_email = "svc@proj.iam.gserviceaccount.com"
+        srv.expect_scope = "https://www.googleapis.com/auth/pubsub"
+        srv.token_uri = f"{srv.url}/token"
+        yield srv
 
 
 def _creds(srv) -> dict:
@@ -151,18 +148,11 @@ def test_provider_feeds_gcp_client_header(token_server):
             self.end_headers()
             self.wfile.write(data)
 
-    ps = ThreadingHTTPServer(("127.0.0.1", 0), _PS)
-    threading.Thread(target=ps.serve_forever, daemon=True).start()
-    try:
+    with HttpServer(_PS) as ps:
         provider = service_account_token_provider(
             json.dumps(_creds(token_server)),  # JSON-text credential form
             scope=token_server.expect_scope,
         )
-        client = PubSubClient(
-            f"http://127.0.0.1:{ps.server_address[1]}", "proj",
-            token_provider=provider,
-        )
+        client = PubSubClient(ps.url, "proj", token_provider=provider)
         client.publish("topic1", ["hello"])
         assert seen["auth"] == "Bearer tok-1"
-    finally:
-        ps.shutdown()

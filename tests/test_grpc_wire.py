@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -32,6 +31,7 @@ from bento_spark.operators.grpc_wire import (
     grpc_enrich,
     hpack_encode,
 )
+from bento_spark.serving import TcpServer
 
 REQ_SCHEMA = {"fields": {1: ("x", "int64")}}
 RESP_SCHEMA = {"fields": {1: ("y", "int64"), 2: ("note", "string")}}
@@ -126,31 +126,18 @@ class _Handler(socketserver.StreamRequestHandler):
                 srv.pongs += 1
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.requests: list[dict] = []
         self.pongs = 0
         self.ping_mid_response = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_hpack_integer_continuation():

@@ -17,6 +17,7 @@ import pytest
 from bento_spark.operators.jetstream import JetStreamClient, NatsKV
 from bento_spark.operators.kvstore import _client_from_url
 from bento_spark.operators.nats_wire import NatsError
+from bento_spark.serving import TcpServer
 from bento_spark.sinks.connector import TRANSPORTS
 
 
@@ -167,12 +168,8 @@ class _Handler(socketserver.StreamRequestHandler):
                     self._msg(reply, sid, json.dumps(resp).encode())
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.pending: dict[str, list] = {}
         self.kv: dict[str, dict] = {}
         self.last: dict[str, dict] = {}  # OBJ streams: subject -> (seq, data)
@@ -182,22 +179,13 @@ class _Server(socketserver.ThreadingTCPServer):
         self.reject_subjects: set[str] = set()
         self.seq = 0
         self.lock = threading.RLock()
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_publish_returns_ordered_seqs(server):

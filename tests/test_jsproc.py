@@ -150,8 +150,9 @@ def test_v0_fetch_non2xx_returned_not_thrown(spark):
     """The transport contract: 4xx comes back as {status, body}, the
     script decides — same as the reference's http.DefaultClient.Do."""
     import json
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    import threading
+    from http.server import BaseHTTPRequestHandler
+
+    from bento_spark.serving import HttpServer
 
     class H(BaseHTTPRequestHandler):
         def do_GET(self):
@@ -164,15 +165,10 @@ def test_v0_fetch_non2xx_returned_not_thrown(spark):
         def log_message(self, *a):
             pass
 
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        code = (f'let r = bento.v0_fetch("http://127.0.0.1:'
-                f'{srv.server_address[1]}/x", {{}}, "GET", "");\n'
+    with HttpServer(H) as srv:
+        code = (f'let r = bento.v0_fetch("{srv.url}/x", {{}}, "GET", "");\n'
                 'bento.v0_msg_set_structured(r);')
         df = spark.createDataFrame([("x",)], "content string")
         rows = javascript_processor(df, code).collect()
         assert rows[0]._error is None
         assert json.loads(rows[0].content) == {"status": 404, "body": "gone"}
-    finally:
-        srv.shutdown()

@@ -163,6 +163,50 @@ def test_fetch_pages_through_the_log(broker):
     assert [r[3] for r in rows] == list(range(10))
 
 
+class _DeniedClient:
+    """A broker client whose reads fail with a non-connection OSError."""
+
+    built = 0
+
+    def __init__(self, host="localhost", port=9092):
+        _DeniedClient.built += 1
+
+    def fetch(self, *a):
+        raise PermissionError("denied")
+
+    def list_offsets(self, *a):
+        raise PermissionError("denied")
+
+    def close(self):
+        pass
+
+
+@pytest.fixture
+def denied_client(monkeypatch):
+    import bento_spark.operators.kafka_wire as kw
+
+    monkeypatch.setattr(_DeniedClient, "built", 0)
+    monkeypatch.setattr(kw, "KafkaProducerClient", _DeniedClient)
+    return _DeniedClient
+
+
+def test_fetch_does_not_retry_non_connection_errors(denied_client):
+    from bento_spark.sources.kafka_source import _Range, _read_range
+
+    with pytest.raises(PermissionError):
+        list(_read_range(_Range("127.0.0.1", 1, "t1", 0, 0, 10)))
+    assert denied_client.built == 1
+
+
+def test_list_offsets_does_not_retry_non_connection_errors(denied_client):
+    from bento_spark.sources.kafka_source import _Common
+
+    common = _Common({"topic": "t1"})
+    with pytest.raises(PermissionError):
+        common._offsets(common._client(), [0], -2)
+    assert denied_client.built == 1
+
+
 def test_spark_batch_read_bento_kafka(spark, broker):
     from bento_spark.operators.kafka_wire import KafkaProducerClient as KPC
     from bento_spark.sources.kafka_source import register

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from bento_spark.operators.kvstore import (
     MemoryKV,
     SqliteKV,
@@ -70,6 +72,30 @@ def test_kv_enrich_retries_dropped_connection(spark):
     df = spark.createDataFrame([(1,), (2,)], "k long").coalesce(1)
     out = {r.k: r.v for r in kv_enrich(df, _Flaky, "k", "v").collect()}
     assert out == {1: "v1", 2: "v2"}
+
+
+def test_kv_enrich_does_not_retry_non_connection_errors(spark):
+    """Only connection failures are retried: a PermissionError from the
+    client surfaces on the first MGET, without building a second
+    client (and without the retry sleeps)."""
+
+    class _Denied:
+        built = 0  # class-level: shared across factory() calls
+
+        def __init__(self):
+            _Denied.built += 1
+
+        def mget(self, keys):
+            raise PermissionError(f"denied on client {_Denied.built}")
+
+        def close(self):
+            pass
+
+    df = spark.createDataFrame([(1,), (2,)], "k long").coalesce(1)
+    with pytest.raises(Exception) as ei:
+        kv_enrich(df, _Denied, "k", "v").collect()
+    assert "PermissionError: denied on client 1" in str(ei.value)
+    assert "on client 2" not in str(ei.value)
 
 
 def test_memory_kv_snapshot(spark):

@@ -18,9 +18,8 @@ from bento_spark.testing.memcached_server import (
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_mset_mget_roundtrip_across_chunk_boundary(server):

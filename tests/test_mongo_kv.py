@@ -8,12 +8,12 @@ from __future__ import annotations
 
 import socketserver
 import struct
-import threading
 
 import pytest
 
 from bento_spark.operators.kvstore import _client_from_url
 from bento_spark.operators.mongokv import MongoKV, bson_decode, bson_encode
+from bento_spark.serving import TcpServer
 
 # --- BSON codec ------------------------------------------------------------
 
@@ -131,12 +131,8 @@ class _Handler(socketserver.StreamRequestHandler):
                 self._reply({"ok": 0.0, "codeName": "CommandNotFound"})
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self._req = 1000
         self.data = {}
         self.find_sizes = []
@@ -145,22 +141,13 @@ class _Server(socketserver.ThreadingTCPServer):
         self._pending = []
         self.reject_keys = set()
         self.fail_next = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_roundtrip_across_chunk_boundary(server):

@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -18,6 +17,7 @@ from bento_spark.operators.mqtt_wire import (
     decode_remaining_length,
     encode_remaining_length,
 )
+from bento_spark.serving import TcpServer
 
 
 def test_remaining_length_spec_vectors():
@@ -110,33 +110,20 @@ class _Handler(socketserver.StreamRequestHandler):
                 return
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
         self.consumer_acks = []
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.messages: dict[str, list[bytes]] = {}
         self.pending_acks: list[int] = []
         self.ack_batch = 1  # ack immediately by default
         self.refuse = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_connect_and_qos1_publish(server):

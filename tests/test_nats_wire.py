@@ -7,11 +7,11 @@ from __future__ import annotations
 
 import json
 import socketserver
-import threading
 
 import pytest
 
 from bento_spark.operators.nats_wire import NatsClient, NatsError
+from bento_spark.serving import TcpServer
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -84,33 +84,20 @@ class _Handler(socketserver.StreamRequestHandler):
                 self.wfile.flush()
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.messages: dict[str, list[bytes]] = {}
         self.connects: list[dict] = []
         self.reject_payloads: set[bytes] = set()
         self.ping_before_ack = False
         self.responder = None  # (subject, payload) -> reply bytes | None
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_handshake_and_pipelined_publish(server):

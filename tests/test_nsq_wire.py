@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -19,6 +18,7 @@ from bento_spark.operators.nsq_wire import (
     NsqClient,
     NsqError,
 )
+from bento_spark.serving import TcpServer
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -91,12 +91,8 @@ class _Handler(socketserver.StreamRequestHandler):
                 return
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.topics: dict[str, list[bytes]] = {}
         self.channels: dict = {}
         self.finned: set[str] = set()
@@ -106,22 +102,13 @@ class _Server(socketserver.ThreadingTCPServer):
         self.fail_pub = False
         self.heartbeat_after_identify = False
         self.heartbeat_before_ok = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_identify_and_mpub(server):

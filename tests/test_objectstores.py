@@ -9,12 +9,12 @@ from __future__ import annotations
 
 import base64
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qsl, unquote, urlparse
 
 import pytest
 
+from bento_spark.serving import HttpServer
 from bento_spark.sinks.connector import TRANSPORTS
 from bento_spark.sources.objectstore import (
     AzureBlobClient,
@@ -226,51 +226,35 @@ class _HdfsHandler(BaseHTTPRequestHandler):
         self.end_headers()
 
 
-def _server(handler_cls, **attrs):
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), handler_cls)
-    srv.objects = {}
-    srv.files = {}
-    srv.mtimes = {}
-    srv.redirects = 0
-    for k, v in attrs.items():
-        setattr(srv, k, v)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+def _server(handler_cls):
+    srv = HttpServer(handler_cls)
+    srv.objects, srv.files, srv.mtimes, srv.redirects = {}, {}, {}, 0
     return srv
 
 
 @pytest.fixture
 def gcs_server():
-    srv = _server(_GcsHandler)
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with _server(_GcsHandler) as srv:
+        yield srv
 
 
 @pytest.fixture
 def azure_server():
-    srv = _server(_AzureHandler)
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with _server(_AzureHandler) as srv:
+        yield srv
 
 
 @pytest.fixture
 def hdfs_server():
-    srv = _server(_HdfsHandler)
-    yield srv
-    srv.shutdown()
-    srv.server_close()
-
-
-def _url(srv):
-    return f"http://127.0.0.1:{srv.server_address[1]}"
+    with _server(_HdfsHandler) as srv:
+        yield srv
 
 
 # -- GCS ------------------------------------------------------------------
 
 
 def test_gcs_roundtrip_list_paginates(gcs_server):
-    c = GcsClient(_url(gcs_server), "data")
+    c = GcsClient(gcs_server.url, "data")
     for i in range(5):
         c.put_object(f"in/d{i}.txt", b"x%d" % i)
     objs = c.list_objects("in/")
@@ -279,7 +263,7 @@ def test_gcs_roundtrip_list_paginates(gcs_server):
 
 
 def test_gcs_bridge_incremental(gcs_server, tmp_path):
-    c = GcsClient(_url(gcs_server), "data")
+    c = GcsClient(gcs_server.url, "data")
     c.put_object("in/a.jsonl", b'{"v":1}\n')
     bridge = ObjectStoreBridge(c)
     out = str(tmp_path / "staged")
@@ -291,7 +275,7 @@ def test_gcs_bridge_incremental(gcs_server, tmp_path):
 
 def test_gcs_transport(gcs_server):
     t = TRANSPORTS["gcp_cloud_storage"](
-        {"endpoint": _url(gcs_server), "bucket": "sink"}
+        {"endpoint": gcs_server.url, "bucket": "sink"}
     )
     t.send(['{"a":1}', '{"a":2}'])
     t.close()
@@ -304,7 +288,7 @@ def test_gcs_transport(gcs_server):
 
 
 def test_azure_blob_signed_roundtrip(azure_server):
-    c = AzureBlobClient(_url(azure_server), AZ_ACCOUNT, AZ_KEY, "cont")
+    c = AzureBlobClient(azure_server.url, AZ_ACCOUNT, AZ_KEY, "cont")
     c.put_object("in/a.bin", bytes(range(64)))
     assert c.get_object("in/a.bin") == bytes(range(64))
     objs = c.list_objects("in/")
@@ -314,7 +298,7 @@ def test_azure_blob_signed_roundtrip(azure_server):
 
 def test_azure_blob_bad_key_rejected(azure_server):
     bad = AzureBlobClient(
-        _url(azure_server), AZ_ACCOUNT,
+        azure_server.url, AZ_ACCOUNT,
         base64.b64encode(b"wrong").decode(), "cont",
     )
     from bento_spark.sources.objectstore import ObjectStoreError
@@ -327,7 +311,7 @@ def test_azure_blob_bad_key_rejected(azure_server):
 def test_azure_blob_bridge_and_transport(azure_server, tmp_path):
     t = TRANSPORTS["azure_blob_storage"](
         {
-            "endpoint": _url(azure_server),
+            "endpoint": azure_server.url,
             "account": AZ_ACCOUNT,
             "key": AZ_KEY,
             "container": "cont",
@@ -335,7 +319,7 @@ def test_azure_blob_bridge_and_transport(azure_server, tmp_path):
     )
     t.send(["r1", "r2"])
     t.close()
-    c = AzureBlobClient(_url(azure_server), AZ_ACCOUNT, AZ_KEY, "cont")
+    c = AzureBlobClient(azure_server.url, AZ_ACCOUNT, AZ_KEY, "cont")
     assert ObjectStoreBridge(c).drain(str(tmp_path / "s"), "out/") == 1
 
 
@@ -343,14 +327,14 @@ def test_azure_blob_bridge_and_transport(azure_server, tmp_path):
 
 
 def test_hdfs_create_follows_307_redirect(hdfs_server):
-    c = WebHdfsClient(_url(hdfs_server), "/data")
+    c = WebHdfsClient(hdfs_server.url, "/data")
     c.put_object("part-0.ndjson", b'{"v":1}\n')
     assert hdfs_server.redirects == 1  # namenode leg exercised
     assert c.get_object("part-0.ndjson") == b'{"v":1}\n'
 
 
 def test_hdfs_bridge_lists_and_mirrors(hdfs_server, tmp_path):
-    c = WebHdfsClient(_url(hdfs_server), "/data")
+    c = WebHdfsClient(hdfs_server.url, "/data")
     c.put_object("a.jsonl", b"1\n")
     c.put_object("b.jsonl", b"2\n")
     bridge = ObjectStoreBridge(c)
@@ -363,7 +347,7 @@ def test_hdfs_bridge_lists_and_mirrors(hdfs_server, tmp_path):
 
 def test_hdfs_transport(hdfs_server):
     t = TRANSPORTS["hdfs"](
-        {"endpoint": _url(hdfs_server), "base_path": "/sink"}
+        {"endpoint": hdfs_server.url, "base_path": "/sink"}
     )
     t.send(["x"])
     t.close()

@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 import socket
 import socketserver
-import threading
 import urllib.request
 
 import pytest
@@ -27,6 +26,7 @@ from bento_spark.observability import (
     prometheus_exposition,
     statsd_flush,
 )
+from bento_spark.serving import HttpServer, TcpServer
 
 
 @pytest.fixture()
@@ -55,25 +55,19 @@ def test_prometheus_exposition_and_scrape(reg):
     assert 'output_sent{output="kafka"} 7' in text
     assert "# TYPE buffer_backlog gauge" in text
     assert "output_latency_count 2" in text
-    srv = PrometheusServer(reg)
-    try:
-        with urllib.request.urlopen(
-            f"http://127.0.0.1:{srv.port}/metrics"
-        ) as resp:
-            assert resp.headers["Content-Type"].startswith("text/plain")
-            assert b"output_sent" in resp.read()
-    finally:
-        srv.stop()
+    with PrometheusServer(reg) as srv, urllib.request.urlopen(
+        f"{srv.url}/metrics"
+    ) as resp:
+        assert resp.headers["Content-Type"].startswith("text/plain")
+        assert b"output_sent" in resp.read()
 
 
 def test_json_api_endpoint(reg):
-    srv = JsonApiServer(reg)
-    try:
-        with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/") as resp:
-            snap = json.loads(resp.read())
-        assert snap["gauges"]["buffer.backlog"] == 42
-    finally:
-        srv.stop()
+    with JsonApiServer(reg) as srv, urllib.request.urlopen(
+        f"{srv.url}/"
+    ) as resp:
+        snap = json.loads(resp.read())
+    assert snap["gauges"]["buffer.backlog"] == 42
 
 
 def test_statsd_udp(reg):
@@ -96,10 +90,8 @@ def test_influxdb_tcp(reg):
         def handle(self):
             got.append(self.rfile.read())
 
-    srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        n = influxdb_flush(reg, "127.0.0.1", srv.server_address[1])
+    with TcpServer(H) as srv:
+        n = influxdb_flush(reg, "127.0.0.1", srv.port)
         assert n == 4
         # the handler thread appends after the client closes — wait
         import time
@@ -108,16 +100,13 @@ def test_influxdb_tcp(reg):
             if got:
                 break
             time.sleep(0.02)
-    finally:
-        srv.shutdown()
-        srv.server_close()
     lines = got[0].decode().splitlines()
     assert any("output_sent=7" in ln and "output=kafka" in ln for ln in lines)
     assert any("output_latency_count=2i" in ln for ln in lines)
 
 
 def test_cloudwatch_putmetricdata_signed(reg):
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    from http.server import BaseHTTPRequestHandler
     from urllib.parse import parse_qsl
 
     from bento_spark.functions.awsauth import sign_request
@@ -148,17 +137,12 @@ def test_cloudwatch_putmetricdata_signed(reg):
             self.send_header("Content-Length", "0")
             self.end_headers()
 
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
+    with HttpServer(H) as srv:
         n = cloudwatch_flush(
-            reg, f"http://127.0.0.1:{srv.server_address[1]}",
+            reg, srv.url,
             region="eu-west-1", access_key="AK", secret_key="SK",
         )
         assert n == 3  # 2 counters + 1 gauge
-    finally:
-        srv.shutdown()
-        srv.server_close()
     q = calls[0]
     assert q["Action"] == "PutMetricData" and q["Namespace"] == "Bento"
     names = {v for k, v in q.items() if k.endswith("MetricName")}
@@ -204,7 +188,7 @@ def test_span_error_capture():
 
 
 def _http_sink(store):
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+    from http.server import BaseHTTPRequestHandler
 
     class H(BaseHTTPRequestHandler):
         def log_message(self, *a):
@@ -219,9 +203,7 @@ def _http_sink(store):
             self.end_headers()
             self.wfile.write(b"{}")
 
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    return srv
+    return HttpServer(H)
 
 
 def test_otlp_export_http():
@@ -229,13 +211,9 @@ def test_otlp_export_http():
     with tr.span("op-a"):
         pass
     store = []
-    srv = _http_sink(store)
-    try:
-        n = otlp_export(tr, f"http://127.0.0.1:{srv.server_address[1]}")
+    with _http_sink(store) as srv:
+        n = otlp_export(tr, srv.url)
         assert n == 1
-    finally:
-        srv.shutdown()
-        srv.server_close()
     path, body, _h = store[0]
     assert path == "/v1/traces"
     res = body["resourceSpans"][0]
@@ -248,16 +226,11 @@ def test_cloudtrace_export():
     with tr.span("bq-load"):
         pass
     store = []
-    srv = _http_sink(store)
-    try:
+    with _http_sink(store) as srv:
         n = cloudtrace_export(
-            tr, f"http://127.0.0.1:{srv.server_address[1]}", "proj-1",
-            token_provider=lambda: "tok",
+            tr, srv.url, "proj-1", token_provider=lambda: "tok",
         )
         assert n == 1
-    finally:
-        srv.shutdown()
-        srv.server_close()
     path, body, headers = store[0]
     assert path == "/v2/projects/proj-1/traces:batchWrite"
     assert headers["Authorization"] == "Bearer tok"
@@ -275,8 +248,7 @@ def test_redis_rate_limit_distributed(monkeypatch):
     from bento_spark.operators.kvstore import RedisKV
     from bento_spark.operators.ratelimit import RedisRateLimit
 
-    srv = _Server()
-    try:
+    with _Server() as srv:
         t = [100.0]
 
         class Clock:
@@ -302,5 +274,3 @@ def test_redis_rate_limit_distributed(monkeypatch):
         # throttle sleeps into the next window then admits
         slept = b.throttle(1)
         assert slept > 0
-    finally:
-        srv.stop()

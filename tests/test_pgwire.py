@@ -24,9 +24,8 @@ from bento_spark.testing.pgwire_server import (  # noqa: E402
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _client(server, password=PASSWORD):

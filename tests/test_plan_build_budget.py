@@ -34,9 +34,27 @@ BUDGETS = {
 }
 
 
+def _settle_detaches(spark, timeout_s: float = 10.0) -> None:
+    """Free unreachable JavaObjects and wait until py4j has sent their
+    detaches. Freeing a JavaObject queues a detach (``m\nd\n``) that
+    py4j's FinalizerWorker thread sends up to a second later, so without
+    this the window would count a timing-dependent share of earlier
+    tests' (and the warm-up build's) detaches, and of its own."""
+    import gc
+    import time
+
+    gc.collect()
+    client = spark.sparkContext._gateway._gateway_client
+    pending = getattr(client, "finalizer_deque", None)
+    deadline = time.monotonic() + timeout_s
+    while pending and time.monotonic() < deadline:
+        time.sleep(0.01)
+
+
 def _count_py4j_commands(spark, fn) -> int:
     from py4j.java_gateway import GatewayClient
 
+    _settle_detaches(spark)  # nothing from before the window counts
     counter = {"n": 0}
     orig = GatewayClient.send_command
 
@@ -47,6 +65,7 @@ def _count_py4j_commands(spark, fn) -> int:
     GatewayClient.send_command = counting
     try:
         fn()
+        _settle_detaches(spark)  # every detach of the build's own counts
     finally:
         GatewayClient.send_command = orig
     return counter["n"]

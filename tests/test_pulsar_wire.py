@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import socketserver
 import struct
-import threading
 
 import pytest
 
@@ -36,6 +35,7 @@ from bento_spark.operators.pulsar_wire import (
     decode_frame,
     encode_frame,
 )
+from bento_spark.serving import TcpServer
 
 
 class _Handler(socketserver.StreamRequestHandler):
@@ -142,12 +142,8 @@ class _Handler(socketserver.StreamRequestHandler):
                 raise AssertionError(f"unexpected command {t}")
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.messages: dict[str, list] = {}
         self.acked: list[int] = []
         self.reject_payloads: set[bytes] = set()
@@ -155,22 +151,13 @@ class _Server(socketserver.ThreadingTCPServer):
         self.held: list = []
         self.ping_before_receipt = False
         self.producer_topic = ""
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def test_frame_codec_roundtrip():

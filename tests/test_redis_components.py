@@ -22,6 +22,7 @@ import time
 import pytest
 
 from bento_spark.operators.kvstore import RedisKV
+from bento_spark.serving import TcpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 from bento_spark.sources.redis_bridge import (
     RedisListBridge,
@@ -213,12 +214,8 @@ class _Handler(socketserver.StreamRequestHandler):
                     )
 
 
-class _Server(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _Server(TcpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.kv: dict[str, str] = {}
         self.lists: dict[str, list[str]] = {}
         self.streams: dict[str, list] = {}
@@ -226,23 +223,13 @@ class _Server(socketserver.ThreadingTCPServer):
         self.pubsub: dict[str, list[str]] = {}
         self.xadd_seq = 0
         self.lock = threading.RLock()
-        self.thread = threading.Thread(target=self.serve_forever, daemon=True)
-        self.thread.start()
-
-    @property
-    def port(self) -> int:
-        return self.server_address[1]
-
-    def stop(self) -> None:
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _client(server) -> RedisKV:

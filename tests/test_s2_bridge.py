@@ -9,12 +9,13 @@ from __future__ import annotations
 import base64
 import json
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qs, unquote, urlparse
 
 import pytest
 
 from bento_spark.operators.cachepolicy import FileKV
+from bento_spark.serving import HttpServer
 from bento_spark.sources.s2_bridge import S2Bridge, S2Client, S2Error
 
 TOKEN = "tok-123"
@@ -120,10 +121,8 @@ class _Handler(BaseHTTPRequestHandler):
 def s2srv():
     state = _S2State()
     handler = type("H", (_Handler,), {"state": state})
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield state, f"http://127.0.0.1:{srv.server_port}"
-    srv.shutdown()
+    with HttpServer(handler) as srv:
+        yield state, srv.url
 
 
 def _client(endpoint, token=TOKEN):

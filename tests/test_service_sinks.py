@@ -12,15 +12,16 @@ import hmac
 import json
 import socketserver
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import duckdb
 import pytest
 
+from bento_spark.serving import HttpServer, TcpServer
 from bento_spark.sinks.connector import TRANSPORTS, DeliveryError
 
 
-class _HttpServer(ThreadingHTTPServer):
+class _HttpServer(HttpServer):
     """Records every request; per-test hooks tweak the response."""
 
     def __init__(self):
@@ -49,25 +50,15 @@ class _HttpServer(ThreadingHTTPServer):
                 h.end_headers()
                 h.wfile.write(payload)
 
-        super().__init__(("127.0.0.1", 0), H)
         self.requests: list[dict] = []
         self.next_status: int | None = None
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def url(self):
-        return f"http://127.0.0.1:{self.server_address[1]}"
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(H)
 
 
 @pytest.fixture
 def http_server():
-    srv = _HttpServer()
-    yield srv
-    srv.stop()
+    with _HttpServer() as srv:
+        yield srv
 
 
 # -- duckdb_append --------------------------------------------------------
@@ -232,10 +223,7 @@ def test_pusher_hmac_signature_verified(http_server):
 # -- questdb --------------------------------------------------------------
 
 
-class _IlpServer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _IlpServer(TcpServer):
     def __init__(self):
         class H(socketserver.StreamRequestHandler):
             def handle(h):
@@ -245,13 +233,8 @@ class _IlpServer(socketserver.ThreadingTCPServer):
                         return
                     self.lines.append(line.decode().rstrip("\n"))
 
-        super().__init__(("127.0.0.1", 0), H)
         self.lines: list[str] = []
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(H)
 
 
 def test_questdb_ilp_typing_and_escaping():
@@ -259,7 +242,7 @@ def test_questdb_ilp_typing_and_escaping():
     try:
         t = TRANSPORTS["questdb"](
             {
-                "address": f"127.0.0.1:{srv.server_address[1]}",
+                "address": f"127.0.0.1:{srv.port}",
                 "table": "metrics",
             }
         )

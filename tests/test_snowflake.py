@@ -10,8 +10,7 @@ import base64
 import gzip
 import hashlib
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
@@ -29,6 +28,7 @@ from bento_spark.operators.snowflake import (
     key_fingerprint,
     snowflake_jwt,
 )
+from bento_spark.serving import HttpServer
 
 # module-scoped key: RSA keygen is the slow part
 KEY = generate_keypair(bits=1024)
@@ -124,28 +124,21 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(data)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.pub_n, self.pub_e = N, E
         self.calls = []
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def endpoint(self):
-        return f"http://127.0.0.1:{self.server_address[1]}"
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with _Server() as srv:
+        yield srv
 
 
 def test_insert_files_jwt_verified(server):
-    c = SnowpipeClient(server.endpoint, "myacct", "loader", KEY)
+    c = SnowpipeClient(server.url, "myacct", "loader", KEY)
     resp = c.insert_files("DB", "SCH", "PIPE", ["f1.gz", "f2.gz"], "req-1")
     assert resp["responseCode"] == "SUCCESS"
     path, body = server.calls[0]
@@ -155,7 +148,7 @@ def test_insert_files_jwt_verified(server):
 
 def test_wrong_key_rejected(server):
     other = generate_keypair(bits=1024)
-    c = SnowpipeClient(server.endpoint, "myacct", "loader", other)
+    c = SnowpipeClient(server.url, "myacct", "loader", other)
     with pytest.raises(SnowflakeError, match="HTTP 401"):
         c.insert_files("DB", "SCH", "PIPE", ["f.gz"], "r")
 
@@ -169,7 +162,7 @@ def test_snowflake_put_transport(server):
         "uploader": lambda path, data: staged.__setitem__(path, data),
         "path_prefix": "out",
         "snowpipe": {
-            "endpoint": server.endpoint, "database": "DB",
+            "endpoint": server.url, "database": "DB",
             "schema": "SCH", "pipe": "P",
         },
     })

@@ -4,12 +4,12 @@ sentry_capture (event POST + passthrough)."""
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
 from bento_spark.operators.snowplow import COLUMNS, opensnowcat
+from bento_spark.serving import HttpServer
 
 
 def _tsv(**fields) -> str:
@@ -174,26 +174,23 @@ class _SentryHandler(BaseHTTPRequestHandler):
         self.wfile.write(payload)
 
 
-class _SentryServer(ThreadingHTTPServer):
+class _SentryServer(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _SentryHandler)
         self.events = []
         self.reject = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
+        super().__init__(_SentryHandler)
 
 
 @pytest.fixture()
 def sentry_server():
-    srv = _SentryServer()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with _SentryServer() as srv:
+        yield srv
 
 
 def test_sentry_capture_posts_and_passes_through(spark, sentry_server):
     from bento_spark.operators.sentry import sentry_capture
 
-    port = sentry_server.server_address[1]
+    port = sentry_server.port
     dsn = f"http://pubkey@127.0.0.1:{port}/42"
     df = spark.range(5).selectExpr("id", "concat('oops-', id) AS msg")
     out = sentry_capture(
@@ -214,7 +211,7 @@ def test_sentry_capture_failure_flags_error(spark, sentry_server):
     from bento_spark.operators.sentry import sentry_capture
 
     sentry_server.reject = True
-    port = sentry_server.server_address[1]
+    port = sentry_server.port
     df = spark.range(2).selectExpr("id", "string(id) AS msg")
     out = sentry_capture(df, f"http://k@127.0.0.1:{port}/1", "msg").collect()
     assert all(r["_error"] == "sentry HTTP 429" for r in out)

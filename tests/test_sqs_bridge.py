@@ -8,12 +8,12 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
 from bento_spark.functions.awsauth import sign_request
+from bento_spark.serving import HttpServer
 from bento_spark.sources.sqs_bridge import SqsBridge
 
 SECRET = "bridge-secret"
@@ -91,32 +91,22 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(payload)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.queue: dict[str, str] = {}
         self.inflight: set[str] = set()
         self.fail_deletes = 0
-        threading.Thread(target=self.serve_forever, daemon=True).start()
+        super().__init__(_Handler)
 
     def seed(self, bodies):
         for i, b in enumerate(bodies):
             self.queue[f"h{i}"] = b
 
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
-
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _bridge(server):

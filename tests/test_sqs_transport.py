@@ -8,12 +8,12 @@ from __future__ import annotations
 
 import json
 import re
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 
 import pytest
 
 from bento_spark.functions.awsauth import sign_request
+from bento_spark.serving import HttpServer
 from bento_spark.sinks.connector import deliver
 
 SECRET = "sqs-secret"
@@ -85,30 +85,20 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(payload)
 
 
-class _Server(ThreadingHTTPServer):
+class _Server(HttpServer):
     def __init__(self):
-        super().__init__(("127.0.0.1", 0), _Handler)
         self.messages: list[str] = []
         self.calls: list[int] = []
         self.fail_500_first = False
         self.throttle_first = False
         self.reject_all = False
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(_Handler)
 
 
 @pytest.fixture()
 def server():
-    srv = _Server()
-    yield srv
-    srv.stop()
+    with _Server() as srv:
+        yield srv
 
 
 def _conf(server, **kw):

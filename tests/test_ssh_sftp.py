@@ -14,12 +14,13 @@ from __future__ import annotations
 
 import os
 import socket
-import threading
+import socketserver
 
 import pytest
 
 from bento_spark.functions import rsa
 from bento_spark.operators import ssh_wire as sw
+from bento_spark.serving import TcpServer
 
 # ---------------------------------------------------------------------------
 # primitive vectors
@@ -252,31 +253,22 @@ def _serve_sftp(t: sw.Transport, root: str):
             status(rid, sw.FX_FAILURE, str(exc))
 
 
-class SshServer:
+class _SshHandler(socketserver.BaseRequestHandler):
+    def handle(self):
+        self.server._handle(self.request)
+
+
+class SshServer(TcpServer):
     def __init__(self, root: str, password: str = "secret"):
         self.root = root
         self.password = password
-        self._sock = socket.socket()
-        self._sock.bind(("127.0.0.1", 0))
-        self._sock.listen(4)
-        self.port = self._sock.getsockname()[1]
         self.errors: list[BaseException] = []
-        threading.Thread(target=self._accept_loop, daemon=True).start()
+        super().__init__(_SshHandler)
 
     def _auth(self, user, password, pubkey=None):
         if pubkey is not None:
             return user == "alice" and pubkey == (_USERKEY[0], _USERKEY[1])
         return user == "alice" and password == self.password
-
-    def _accept_loop(self):
-        while True:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(
-                target=self._handle, args=(conn,), daemon=True
-            ).start()
 
     def _handle(self, conn):
         t = sw.Transport(conn, "server")
@@ -294,16 +286,12 @@ class SshServer:
             except OSError:
                 pass
 
-    def stop(self):
-        self._sock.close()
-
 
 @pytest.fixture(scope="module")
 def server(tmp_path_factory):
     root = tmp_path_factory.mktemp("sftp_root")
-    srv = SshServer(str(root))
-    yield srv
-    srv.stop()
+    with SshServer(str(root)) as srv:
+        yield srv
     assert not srv.errors, srv.errors
 
 

@@ -126,3 +126,52 @@ def test_kmeans_raises_on_too_few_rows(spark):
 
     with _pytest.raises(ValueError, match="init"):
         kmeans_lloyd(df, "id", "v", dim=2, k=4, iters=1)
+
+
+def _semdedup_pair(spark, rows, schema, threshold=0.95):
+    """(engine, DuckDB twin) keep-sets of semdedup over ``rows``."""
+    import duckdb
+
+    from bento_spark.operators.clustering import semdedup, semdedup_sql
+
+    id_col = schema.split()[0]
+    df = spark.createDataFrame(rows, schema)
+    got = {
+        (r[id_col], r.cluster, r.keep)
+        for r in semdedup(df, id_col, "v", dim=4, k=2, iters=1,
+                          threshold=threshold).collect()
+    }
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE t ({schema.replace('array<double>', 'DOUBLE[]')})")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    sql = semdedup_sql("t", id_col, "v", dim=4, k=2, iters=1, threshold=threshold)
+    want = set(con.execute(sql).fetchall())
+    con.close()
+    return got, want
+
+
+# two groups, each with one near-duplicate (cosine > 0.99) of its
+# first member and one distinct vector
+_SEMD_VECS = [
+    [1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0], [0.99, 0.05, 0.0, 0.0],
+    [0.0, 0.0, 0.98, 0.1], [0.6, 0.8, 0.0, 0.0], [0.0, 0.0, 0.5, 0.5],
+]
+
+
+def test_semdedup_string_ids_match_oracle(spark):
+    rows = [(f"k{i}", v) for i, v in enumerate(_SEMD_VECS)]
+    got, want = _semdedup_pair(spark, rows, "doc string, v array<double>")
+    assert got == want
+    assert {i for i, _, keep in got if not keep} == {"k2", "k3"}
+
+
+def test_semdedup_zero_vectors_are_kept_like_oracle(spark):
+    """A zero-norm vector has no cosine (NaN here, NULL in DuckDB), so it
+    neither dominates nor is dominated: both zero rows are kept."""
+    zero = [0.0, 0.0, 0.0, 0.0]
+    rows = [(i, v) for i, v in enumerate(_SEMD_VECS + [zero, zero])]
+    got, want = _semdedup_pair(spark, rows, "id long, v array<double>")
+    assert got == want
+    keep = {i: k for i, _, k in got}
+    assert keep[6] and keep[7]
+    assert not keep[2] and not keep[3]

@@ -10,12 +10,12 @@ from __future__ import annotations
 import base64
 import json
 import os
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler
 from urllib.parse import parse_qsl, urlparse
 
 import pytest
 
+from bento_spark.serving import HttpServer
 from bento_spark.sinks.connector import TRANSPORTS
 from bento_spark.sources.watch_inputs import (
     DiscordBridge,
@@ -90,27 +90,20 @@ class _EtcdHandler(BaseHTTPRequestHandler):
 
 @pytest.fixture
 def etcd_server():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _EtcdHandler)
-    srv.kv = {}
-    srv.revision = 0
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
-
-
-def _url(srv):
-    return f"http://127.0.0.1:{srv.server_address[1]}"
+    with HttpServer(_EtcdHandler) as srv:
+        srv.kv = {}
+        srv.revision = 0
+        yield srv
 
 
 def test_etcd_kv_roundtrip(etcd_server):
-    kv = EtcdKV(_url(etcd_server))
+    kv = EtcdKV(etcd_server.url)
     kv.mset([("app/a", "1"), ("app/b", "2")])
     assert kv.mget(["app/a", "app/b", "missing"]) == ["1", "2", None]
 
 
 def test_etcd_watch_cursor_only_fresh_changes(etcd_server, tmp_path):
-    kv = EtcdKV(_url(etcd_server))
+    kv = EtcdKV(etcd_server.url)
     kv.mset([("conf/x", "1"), ("conf/y", "2"), ("other/z", "9")])
     out = str(tmp_path / "staged")
     bridge = EtcdWatchBridge(kv, "conf/")
@@ -127,11 +120,11 @@ def test_etcd_watch_cursor_only_fresh_changes(etcd_server, tmp_path):
 
 def test_etcd_transport(etcd_server):
     t = TRANSPORTS["etcd"](
-        {"endpoint": _url(etcd_server), "prefix": "rows/"}
+        {"endpoint": etcd_server.url, "prefix": "rows/"}
     )
     t.send([json.dumps({"id": 7, "v": "x"})])
     t.close()
-    kv = EtcdKV(_url(etcd_server))
+    kv = EtcdKV(etcd_server.url)
     assert json.loads(kv.mget(["rows/7"])[0])["v"] == "x"
 
 
@@ -160,22 +153,19 @@ class _K8sHandler(BaseHTTPRequestHandler):
 
 @pytest.fixture
 def k8s_server():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _K8sHandler)
-    srv.events = [
-        {"type": "ADDED",
-         "object": {"metadata": {"name": "pod-a", "resourceVersion": "5"}}},
-        {"type": "MODIFIED",
-         "object": {"metadata": {"name": "pod-a", "resourceVersion": "8"}}},
-    ]
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with HttpServer(_K8sHandler) as srv:
+        srv.events = [
+            {"type": "ADDED",
+             "object": {"metadata": {"name": "pod-a", "resourceVersion": "5"}}},
+            {"type": "MODIFIED",
+             "object": {"metadata": {"name": "pod-a", "resourceVersion": "8"}}},
+        ]
+        yield srv
 
 
 def test_k8s_watch_resume_from_resource_version(k8s_server, tmp_path):
     bridge = K8sWatchBridge(
-        _url(k8s_server), "/api/v1/namespaces/default/pods",
+        k8s_server.url, "/api/v1/namespaces/default/pods",
         token="k8s-token",
     )
     out = str(tmp_path / "staged")
@@ -255,20 +245,17 @@ class _DiscordHandler(BaseHTTPRequestHandler):
 
 @pytest.fixture
 def discord_server():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _DiscordHandler)
-    srv.messages = [
-        {"id": "11", "content": "first"},
-        {"id": "15", "content": "second"},
-    ]
-    srv.posted = []
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with HttpServer(_DiscordHandler) as srv:
+        srv.messages = [
+            {"id": "11", "content": "first"},
+            {"id": "15", "content": "second"},
+        ]
+        srv.posted = []
+        yield srv
 
 
 def test_discord_poll_cursor_oldest_first(discord_server, tmp_path):
-    bridge = DiscordBridge(_url(discord_server), "chan1", "d-token")
+    bridge = DiscordBridge(discord_server.url, "chan1", "d-token")
     out = str(tmp_path / "staged")
     assert bridge.drain(out) == 2
     assert [m["content"] for m in _staged(out)] == ["first", "second"]
@@ -280,7 +267,7 @@ def test_discord_poll_cursor_oldest_first(discord_server, tmp_path):
 def test_discord_transport_bot_channel(discord_server):
     t = TRANSPORTS["discord"](
         {
-            "endpoint": _url(discord_server),
+            "endpoint": discord_server.url,
             "channel_id": "chan1",
             "token": "d-token",
         }
@@ -314,21 +301,18 @@ class _TwitterHandler(BaseHTTPRequestHandler):
 
 @pytest.fixture
 def twitter_server():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _TwitterHandler)
-    srv.tweets = [
-        {"id": "100", "text": "hello spark"},
-        {"id": "101", "text": "hello again"},
-    ]
-    srv.queries = []
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    yield srv
-    srv.shutdown()
-    srv.server_close()
+    with HttpServer(_TwitterHandler) as srv:
+        srv.tweets = [
+            {"id": "100", "text": "hello spark"},
+            {"id": "101", "text": "hello again"},
+        ]
+        srv.queries = []
+        yield srv
 
 
 def test_twitter_search_since_id_cursor(twitter_server, tmp_path):
     bridge = TwitterSearchBridge(
-        _url(twitter_server), "spark lang:en", "tw-token"
+        twitter_server.url, "spark lang:en", "tw-token"
     )
     out = str(tmp_path / "staged")
     assert bridge.drain(out) == 2

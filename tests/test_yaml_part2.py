@@ -265,17 +265,15 @@ def test_http_server_output_serves_results(spark):
         [(json.dumps({"r": i}),) for i in range(3)], "content string"
     )
     run_sink(df, False, "http_server", {"path": "/get_p2"})
-    srv = HTTP_SERVER_SINKS["/get_p2"]
-    try:
-        port = srv.server_address[1]
+    first = HTTP_SERVER_SINKS["/get_p2"]
+    run_sink(df, False, "http_server", {"path": "/get_p2"})
+    assert first.socket.fileno() == -1  # the re-run stopped its server
+    with HTTP_SERVER_SINKS["/get_p2"] as srv:
         body = urllib.request.urlopen(
-            f"http://127.0.0.1:{port}/get_p2", timeout=5
+            f"{srv.url}/get_p2", timeout=5
         ).read().decode()
         got = sorted(json.loads(ln)["r"] for ln in body.splitlines() if ln)
         assert got == [0, 1, 2]
-    finally:
-        srv.shutdown()
-        srv.server_close()
 
 
 def test_config_input_output_resources_sections(spark, tmp_path):

@@ -19,14 +19,12 @@ from bento_spark.operators.nanomsg_wire import (
     NanomsgSocket,
 )
 from bento_spark.operators.zmtp_wire import ZmtpError, ZmtpSocket
+from bento_spark.serving import TcpServer
 from bento_spark.sinks.connector import TRANSPORTS
 
 
-class _ZmtpPeer(socketserver.ThreadingTCPServer):
+class _ZmtpPeer(TcpServer):
     """Acts as the bound peer (e.g. PULL when the client is PUSH)."""
-
-    allow_reuse_address = True
-    daemon_threads = True
 
     def __init__(self, socket_type: str, to_send: list[list[bytes]] | None = None):
         outer = self
@@ -69,7 +67,7 @@ class _ZmtpPeer(socketserver.ThreadingTCPServer):
                 flags, ready = h._read_frame()
                 assert flags & 0x04 and ready.startswith(b"\x05READY")
                 meta = b""
-                nb, vb = b"Socket-Type", outer.socket_type.encode()
+                nb, vb = b"Socket-Type", outer.peer_type.encode()
                 meta += bytes([len(nb)]) + nb + struct.pack(">I", len(vb)) + vb
                 h._send_frame(b"\x05READY" + meta, flags=0x04)
                 # receive loop (PULL/SUB peer) or send loop (PUSH/PUB)
@@ -85,20 +83,11 @@ class _ZmtpPeer(socketserver.ThreadingTCPServer):
                     with outer.lock:
                         outer.frames.append((flags, body))
 
-        super().__init__(("127.0.0.1", 0), H)
-        self.socket_type = socket_type
+        self.peer_type = socket_type
         self.to_send = to_send or []
         self.frames: list[tuple[int, bytes]] = []
         self.lock = threading.Lock()
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(H)
 
 
 def _messages(peer) -> list[list[bytes]]:
@@ -182,10 +171,7 @@ def test_zmq_transport():
 # -- nanomsg --------------------------------------------------------------
 
 
-class _SpPeer(socketserver.ThreadingTCPServer):
-    allow_reuse_address = True
-    daemon_threads = True
-
+class _SpPeer(TcpServer):
     def __init__(self, socket_type: str, to_send: list[bytes] | None = None):
         outer = self
 
@@ -197,7 +183,7 @@ class _SpPeer(socketserver.ThreadingTCPServer):
                 outer.peer_protos.append(proto)
                 h.wfile.write(
                     b"\x00SP\x00"
-                    + struct.pack(">H", PROTOCOLS[outer.socket_type])
+                    + struct.pack(">H", PROTOCOLS[outer.peer_type])
                     + b"\x00\x00"
                 )
                 h.wfile.flush()
@@ -211,20 +197,11 @@ class _SpPeer(socketserver.ThreadingTCPServer):
                     (size,) = struct.unpack(">Q", head)
                     outer.received.append(h.rfile.read(size))
 
-        super().__init__(("127.0.0.1", 0), H)
-        self.socket_type = socket_type
+        self.peer_type = socket_type
         self.to_send = to_send or []
         self.received: list[bytes] = []
         self.peer_protos: list[int] = []
-        threading.Thread(target=self.serve_forever, daemon=True).start()
-
-    @property
-    def port(self):
-        return self.server_address[1]
-
-    def stop(self):
-        self.shutdown()
-        self.server_close()
+        super().__init__(H)
 
 
 def test_nanomsg_push_pull_roundtrip():
