@@ -1310,7 +1310,20 @@ def _compile_method(node: A.MethodCall, env: Env) -> Column:
         if isinstance(t, VariantType):
             from bento_spark.bloblang.stdlib import _bento_length_variant
 
-            return _bento_length_variant(recv)
+            out = _bento_length_variant(recv)
+            if not env.in_lambda:
+                # a number, bool or null has no length: the reference
+                # fails the mapping, so the NULL rides the error sink
+                # like not_null's
+                env.error_sink.append(F.when(
+                    out.isNull(),
+                    F.lit(
+                        f"failed assignment (line 1): field "
+                        f"`{_node_src_b(node.recv)}`: expected string, "
+                        f"array or object value"
+                    ),
+                ))
+            return out
         return F.length(recv)
     if node.name == "contains":
         # polymorphic too: substring on strings, membership on arrays

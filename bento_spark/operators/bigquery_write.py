@@ -170,7 +170,7 @@ def _register() -> None:
         """``gcp_bigquery_write_api`` output: JSON messages become
         protobuf rows per the configured ``schema`` (same dict schema
         the protobuf processor uses) appended to ``stream``. gRPC
-        transport errors and retryable AppendRows statuses raise a
+        errors and retryable AppendRows statuses raise a
         retryable DeliveryError (the _default stream tolerates re-sends
         at-least-once, like the reference documents); non-retryable
         statuses dead-letter the batch."""
@@ -195,7 +195,7 @@ def _register() -> None:
                     self.writer.append(chunks)
                 except BigQueryWriteError as ex:
                     raise DeliveryError(str(ex), retryable=ex.retryable) from ex
-                except (GrpcError, H2Error, ConnectionError, OSError) as ex:
+                except (GrpcError, H2Error) as ex:
                     raise DeliveryError(str(ex), retryable=True) from ex
 
             def close(self):

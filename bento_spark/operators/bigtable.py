@@ -143,7 +143,7 @@ def _register() -> None:
                     )
                 try:
                     failed = self.writer.mutate_rows(rows)
-                except (GrpcError, H2Error, ConnectionError) as ex:
+                except (GrpcError, H2Error) as ex:
                     raise DeliveryError(str(ex), retryable=True) from ex
                 if failed:
                     retryable = all(

@@ -22,7 +22,6 @@ mutable to snapshot.
 from __future__ import annotations
 
 import json as _json
-import os
 import sqlite3
 from collections.abc import Callable, Iterable, Iterator
 
@@ -414,7 +413,6 @@ class DynamoKV:
         region: str = "us-east-1",
         access_key: str = "local",
         secret_key: str = "local",
-        max_retries: int = 5,
     ):
         from urllib.parse import urlparse
 
@@ -424,7 +422,6 @@ class DynamoKV:
         self.region = region
         self.access_key = access_key
         self.secret_key = secret_key
-        self.max_retries = max_retries
 
     def _call(self, target: str, payload: dict) -> dict:
         import json
@@ -463,11 +460,13 @@ class DynamoKV:
             ) from e
 
     def mget(self, keys: list[str]) -> list[str | None]:
+        from bento_spark.retry import attempts
+
         out: dict[str, str] = {}
         uniq = list(dict.fromkeys(keys))
         for i in range(0, len(uniq), self.CHUNK_GET):
             pending = [{"k": {"S": k}} for k in uniq[i : i + self.CHUNK_GET]]
-            for attempt in range(self.max_retries + 1):
+            for _ in attempts():
                 resp = self._call(
                     "BatchGetItem",
                     {"RequestItems": {self.table: {"Keys": pending}}},
@@ -483,19 +482,20 @@ class DynamoKV:
                     break
             else:
                 raise RuntimeError(
-                    f"dynamodb BatchGetItem: {len(pending)} keys still "
-                    f"unprocessed after {self.max_retries} retries"
+                    f"dynamodb BatchGetItem: {len(pending)} keys still unprocessed"
                 )
         return [out.get(k) for k in keys]
 
     def mset(self, pairs: Iterable[tuple[str, str]]) -> None:
+        from bento_spark.retry import attempts
+
         puts = [
             {"PutRequest": {"Item": {"k": {"S": k}, "v": {"S": v}}}}
             for k, v in pairs
         ]
         for i in range(0, len(puts), self.CHUNK_PUT):
             pending = puts[i : i + self.CHUNK_PUT]
-            for attempt in range(self.max_retries + 1):
+            for _ in attempts():
                 resp = self._call(
                     "BatchWriteItem", {"RequestItems": {self.table: pending}}
                 )
@@ -504,8 +504,7 @@ class DynamoKV:
                     break
             else:
                 raise RuntimeError(
-                    f"dynamodb BatchWriteItem: {len(pending)} items still "
-                    f"unprocessed after {self.max_retries} retries"
+                    f"dynamodb BatchWriteItem: {len(pending)} items still unprocessed"
                 )
 
     def close(self) -> None:
@@ -544,41 +543,16 @@ def kv_enrich(
     schema = StructType(list(df.schema.fields)).add(out_col, StringType())
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
+        from bento_spark.retry import Client
 
-        client = factory()
-        # MGET is a pure read, so a dropped store connection (observed
-        # rarely at the sf1 gate: a ConnectionResetError mid-pipeline
-        # under heavy host load fails the whole query at local
-        # maxFailures=1) is safely retried on a FRESH client — the old
-        # socket is desynced after a mid-reply reset. Same rationale as
-        # the kafka source's fetch retry (sources/kafka_source.py). Only
-        # connection failures are retried; any other OSError (a refused
-        # permission, a missing file) is not transient and surfaces at
-        # once.
-        retries = 3
-        try:
+        # MGET is a pure read, so it is retried on a fresh client
+        with Client(factory) as client:
             for pdf in batches:
                 keys = pdf[key_col].astype(str).tolist()
-                while True:
-                    try:
-                        vals = client.mget(keys)
-                        break
-                    except (ConnectionError, TimeoutError):
-                        if retries == 0:
-                            raise
-                        retries -= 1
-                        _time.sleep(0.2)
-                        try:
-                            client.close()
-                        except Exception:  # noqa: BLE001
-                            pass
-                        client = factory()
+                vals = client.run(lambda c: c.mget(keys))
                 pdf = pdf.copy()
                 pdf[out_col] = pd.array(vals, dtype=object)
                 yield pdf
-        finally:
-            client.close()
 
     return df.mapInPandas(gen, schema)
 

@@ -387,18 +387,25 @@ def retry(
     change the outcome); the processor earns its keep on effectful
     children (http, cache) where a later application can succeed.
     Backoff is meaningless under batch re-execution and is dropped.
+    Spark caches no streaming plan, so on a stream a child whose outcome
+    changes between evaluations can lose or double a row.
     """
     df = ensure_envelope(df)
     out = child(df)
     for _ in range(attempts - 1):
-        # pin the child's outcome before splitting: filtering the same
-        # unpersisted plan twice re-executes a NONDETERMINISTIC child
-        # per branch, and a row flipping outcomes between evaluations
-        # would land in both branches or neither
-        out = ensure_envelope(out).persist()
+        out = ensure_envelope(out)
+        if not out.isStreaming:
+            # pin the child's outcome before splitting: filtering one
+            # plan twice re-runs a NONDETERMINISTIC child per branch, so
+            # a row flipping outcomes would land in both or neither.
+            # localCheckpoint: the ContextCleaner reaps it, unlike persist
+            out = out.localCheckpoint(eager=False)
         good = out.filter(ok(out))
         bad = out.filter(~ok(out)).withColumn(ERROR, F.lit(None).cast("string"))
-        out = good.unionByName(ensure_envelope(child(bad)))
+        # the child re-runs on its own output, which may add columns
+        out = good.unionByName(
+            ensure_envelope(child(bad)), allowMissingColumns=True
+        )
     return out
 
 

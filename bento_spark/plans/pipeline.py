@@ -1265,25 +1265,16 @@ def _proc_switch_cfg(df: DataFrame, conf) -> DataFrame:
 
 def _proc_retry(df: DataFrame, conf) -> DataFrame:
     """`retry` (processor_retry.go): re-run the children for messages
-    that errored, up to max_retries; rows that recover clear `_error`.
-    Deterministic children make retries no-ops, so the loop only earns
-    its cost for transport-backed children (http, kv) — which is the
-    reference's use case too."""
-    children = conf.get("processors") or []
-    tries = int(conf.get("max_retries", 2))
-    from bento_spark.operators.envelope import ERROR
+    that errored, up to max_retries; rows that recover clear `_error`
+    (operators.processors.retry)."""
+    from bento_spark.operators.processors import retry
 
-    out = _apply_children(df, children, "retry")
-    for _ in range(tries):
-        ok_rows = out.filter(F.col(ERROR).isNull())
-        errored = out.filter(F.col(ERROR).isNotNull()).withColumn(
-            ERROR, F.lit(None).cast("string")
-        )
-        out = ok_rows.unionByName(
-            _apply_children(errored, children, "retry"),
-            allowMissingColumns=True,
-        )
-    return out
+    children = conf.get("processors") or []
+    return retry(
+        df,
+        lambda d: _apply_children(d, children, "retry"),
+        attempts=int(conf.get("max_retries", 2)) + 1,
+    )
 
 
 def _proc_while(df: DataFrame, conf) -> DataFrame:

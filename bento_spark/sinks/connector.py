@@ -11,7 +11,9 @@ module is that loop as a distributed contract:
   ever sees ready-to-send strings;
 * ONE transport per Spark partition (never per row), fed Arrow batches
   re-chunked to ``batch_size`` records per send;
-* bounded retries with linear backoff; exhausted batches go to a
+* bounded retries under the engine's one retry policy
+  (bento_spark/retry.py): jittered exponential backoff, and a fresh
+  transport after a connection error; exhausted batches go to a
   dead-letter ndjson dir when ``dlq_path`` is set, else the task fails
   (Spark's task retry = at-least-once);
 * each delivery returns a tiny receipt row, so a 1000-executor run
@@ -40,6 +42,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bento_spark import retry
 
 
 class DeliveryError(Exception):
@@ -74,20 +78,22 @@ def _sqlite_transport(conf: dict):
             self.con = sqlite3.connect(conf["path"], timeout=30)
             # concurrent partitions race on the WAL switch (exclusive
             # lock) and the DDL — retry instead of failing the task
-            for attempt in range(10):
-                try:
-                    self.con.execute("PRAGMA journal_mode=WAL")
-                    self.con.execute(
-                        f"CREATE TABLE IF NOT EXISTS "
-                        f"{conf.get('table', 'messages')} (v TEXT)"
-                    )
-                    self.con.commit()
-                    break
-                except sqlite3.OperationalError:
-                    if attempt == 9:
-                        raise
-                    self.con.rollback()
-                    time.sleep(0.05 * (attempt + 1))
+            retry.Client(
+                lambda: self.con,
+                resend=lambda ex: isinstance(ex, sqlite3.OperationalError),
+            ).run(self._init)
+
+        def _init(self, con) -> None:
+            try:
+                con.execute("PRAGMA journal_mode=WAL")
+                con.execute(
+                    f"CREATE TABLE IF NOT EXISTS "
+                    f"{conf.get('table', 'messages')} (v TEXT)"
+                )
+                con.commit()
+            except sqlite3.OperationalError:
+                con.rollback()
+                raise
 
         def send(self, batch: list[str]) -> None:
             try:
@@ -242,8 +248,7 @@ def _postgres_transport(conf: dict):
     endpoint (internal/impl/sql/output_sql_insert.go): one multi-row
     INSERT per batch over the from-scratch pgwire client
     (operators/pgwire.py, SCRAM-SHA-256). Connection-class errors
-    (SQLSTATE 08xxx) and socket drops retry; constraint/data errors
-    dead-letter."""
+    (SQLSTATE 08xxx) retry; constraint/data errors dead-letter."""
     from bento_spark.operators.pgwire import PgError, PostgresClient, pg_quote
 
     table = conf.get("table", "messages")
@@ -268,8 +273,6 @@ def _postgres_transport(conf: dict):
             except PgError as ex:
                 retryable = ex.fields.get("C", "").startswith("08")
                 raise DeliveryError(str(ex), retryable=retryable) from ex
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex)) from ex
 
         def close(self):
             self.client.close()
@@ -507,18 +510,13 @@ def _redis_conf_client(conf: dict):
 def _redis_list_transport(conf: dict):
     """``redis_list`` output (internal/impl/redis/output_list.go): one
     multi-value RPUSH per delivery batch over the from-scratch RESP2
-    client — a whole Spark batch is one round trip. Connection failures
-    surface as retryable DeliveryError (transient by nature for a TCP
-    queue push)."""
+    client — a whole Spark batch is one round trip."""
     client = _redis_conf_client(conf)
     key = conf["key"]
 
     class T:
         def send(self, batch: list[str]) -> None:
-            try:
-                client.command("RPUSH", key, *batch)
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            client.command("RPUSH", key, *batch)
 
         def close(self):
             client.close()
@@ -536,10 +534,7 @@ def _redis_pubsub_transport(conf: dict):
 
     class T:
         def send(self, batch: list[str]) -> None:
-            try:
-                client.pipeline([("PUBLISH", channel, m) for m in batch])
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            client.pipeline([("PUBLISH", channel, m) for m in batch])
 
         def close(self):
             client.close()
@@ -559,12 +554,9 @@ def _redis_streams_transport(conf: dict):
 
     class T:
         def send(self, batch: list[str]) -> None:
-            try:
-                client.pipeline(
-                    [("XADD", stream, "*", body_key, m) for m in batch]
-                )
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            client.pipeline(
+                [("XADD", stream, "*", body_key, m) for m in batch]
+            )
 
         def close(self):
             client.close()
@@ -596,10 +588,7 @@ def _redis_hash_transport(conf: dict):
                         retryable=False,
                     )
                 cmds.append(("HSET", key, str(row[key_field]), m))
-            try:
-                client.pipeline(cmds)
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            client.pipeline(cmds)
 
         def close(self):
             client.close()
@@ -675,10 +664,7 @@ def _etcd_transport(conf: dict):
                         retryable=False,
                     )
                 pairs.append((prefix + str(row[key_field]), m))
-            try:
-                client.mset(pairs)
-            except OSError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            client.mset(pairs)
 
         def close(self):
             client.close()
@@ -690,8 +676,7 @@ def _etcd_transport(conf: dict):
 def _zmq_transport(conf: dict):
     """``zmq4`` output (internal/impl/zeromq/output.go): one ZMTP 3.0
     message per payload over a PUSH (or PUB) socket
-    (operators/zmtp_wire.py). ZeroMQ delivery is fire-and-forget;
-    connection failures are the retryable class."""
+    (operators/zmtp_wire.py). ZeroMQ delivery is fire-and-forget."""
     from bento_spark.operators.zmtp_wire import ZmtpSocket
 
     sock = ZmtpSocket(
@@ -702,16 +687,13 @@ def _zmq_transport(conf: dict):
 
     class T:
         def send(self, batch: list[str]) -> None:
-            try:
-                for m in batch:
-                    parts = (
-                        [topic.encode(), m.encode("utf-8")]
-                        if topic
-                        else [m.encode("utf-8")]
-                    )
-                    sock.send_multipart(parts)
-            except OSError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            for m in batch:
+                parts = (
+                    [topic.encode(), m.encode("utf-8")]
+                    if topic
+                    else [m.encode("utf-8")]
+                )
+                sock.send_multipart(parts)
 
         def close(self):
             sock.close()
@@ -733,11 +715,8 @@ def _nanomsg_transport(conf: dict):
 
     class T:
         def send(self, batch: list[str]) -> None:
-            try:
-                for m in batch:
-                    sock.send(m.encode("utf-8"))
-            except OSError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            for m in batch:
+                sock.send(m.encode("utf-8"))
 
         def close(self):
             sock.close()
@@ -826,7 +805,7 @@ def _nats_jetstream_transport(conf: dict):
                 client.publish(
                     subject, [m.encode("utf-8") for m in batch]
                 )
-            except (NatsError, ConnectionError, OSError) as ex:
+            except NatsError as ex:
                 raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
@@ -839,8 +818,7 @@ def _nats_jetstream_transport(conf: dict):
 def _socket_transport(conf: dict):
     """``socket`` output (internal/impl/io/output_socket.go): newline-
     framed writes over one TCP connection per Spark partition
-    (sources/socket_input.SocketWriter). Connection failures are
-    transient by nature → retryable."""
+    (sources/socket_input.SocketWriter)."""
     from bento_spark.sources.socket_input import SocketWriter
 
     writer = SocketWriter(
@@ -849,10 +827,7 @@ def _socket_transport(conf: dict):
 
     class T:
         def send(self, batch: list[str]) -> None:
-            try:
-                writer.send_lines(batch)
-            except OSError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            writer.send_lines(batch)
 
         def close(self):
             writer.close()
@@ -869,8 +844,7 @@ def _kv_store_transport(conf: dict):
     value = the full row. Rides the kvstore URL factory, so every REAL
     protocol client behind it (ES `_bulk`, Mongo OP_MSG upserts,
     DynamoDB BatchWriteItem, redis/memcached/sqlite) is a valid
-    destination; write failures surface per the client's error model
-    and route retryable."""
+    destination."""
     import json as _j
 
     from bento_spark.operators.kvstore import _client_from_url
@@ -891,8 +865,6 @@ def _kv_store_transport(conf: dict):
                 pairs.append((str(row[key_field]), m))
             try:
                 client.mset(pairs)
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
             except RuntimeError as ex:
                 raise DeliveryError(str(ex), retryable=False) from ex
 
@@ -941,8 +913,6 @@ def _cassandra_transport(conf: dict):
                 raise DeliveryError(
                     str(ex), retryable=ex.code in RETRIABLE
                 ) from ex
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
             client.close()
@@ -1243,10 +1213,7 @@ def _questdb_transport(conf: dict):
                 )
                 if fields:
                     lines.append(f"{_escape_name(table)} {fields}\n")
-            try:
-                self.sock.sendall("".join(lines).encode("utf-8"))
-            except OSError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            self.sock.sendall("".join(lines).encode("utf-8"))
 
         def close(self):
             self.sock.close()
@@ -1376,6 +1343,25 @@ def _s3_transport(conf: dict):
     return T()
 
 
+def _put_failed_again(put, records: list, what: str) -> None:
+    """The Kinesis and Firehose batch puts' retry contract: a put that
+    fails some records (an ``ErrorCode`` in their reply) re-sends only
+    those."""
+    from bento_spark.sources.aws_kinesis import KinesisError
+
+    for _ in retry.attempts():
+        try:
+            replies = put(records)
+        except KinesisError as ex:
+            raise DeliveryError(str(ex), retryable=ex.status >= 500) from ex
+        records = [rec for rec, r in zip(records, replies) if "ErrorCode" in r]
+        if not records:
+            return
+    raise DeliveryError(
+        f"{what}: {len(records)} records still failing", retryable=True
+    )
+
+
 @register_transport("kinesis")
 def _kinesis_transport(conf: dict):
     """``aws_kinesis`` output (internal/impl/aws/output_kinesis.go):
@@ -1388,7 +1374,7 @@ def _kinesis_transport(conf: dict):
     import hashlib as _hl
     import json as _j
 
-    from bento_spark.sources.aws_kinesis import KinesisClient, KinesisError
+    from bento_spark.sources.aws_kinesis import KinesisClient
 
     client = KinesisClient(
         conf["endpoint"],
@@ -1407,29 +1393,11 @@ def _kinesis_transport(conf: dict):
     class T:
         def send(self, batch: list[str]) -> None:
             for i in range(0, len(batch), 500):  # PutRecords limit
-                chunk = [(pkey(m), m.encode("utf-8"))
-                         for m in batch[i : i + 500]]
-                for attempt in range(5):
-                    try:
-                        resp = client.put_records(chunk)
-                    except KinesisError as ex:
-                        raise DeliveryError(
-                            str(ex), retryable=ex.status >= 500
-                        ) from ex
-                    if not resp.get("FailedRecordCount"):
-                        break
-                    # keep only the per-record failures for the re-send
-                    chunk = [
-                        rec
-                        for rec, r in zip(chunk, resp["Records"])
-                        if "ErrorCode" in r
-                    ]
-                    time.sleep(0.05 * (attempt + 1))
-                else:
-                    raise DeliveryError(
-                        f"kinesis: {len(chunk)} records still throttled",
-                        retryable=True,
-                    )
+                _put_failed_again(
+                    lambda records: client.put_records(records)["Records"],
+                    [(pkey(m), m.encode("utf-8")) for m in batch[i : i + 500]],
+                    "kinesis",
+                )
 
         def close(self):
             pass
@@ -1446,7 +1414,7 @@ def _firehose_transport(conf: dict):
     the delivery stream concatenates to valid NDJSON."""
     import base64 as _b64
 
-    from bento_spark.sources.aws_kinesis import KinesisError, _aws_json
+    from bento_spark.sources.aws_kinesis import _aws_json
     from urllib.parse import urlparse
 
     endpoint = conf["endpoint"].rstrip("/")
@@ -1469,34 +1437,15 @@ def _firehose_transport(conf: dict):
                         (m + "\n").encode("utf-8")).decode("ascii")}
                     for m in batch[i : i + 500]
                 ]
-                for attempt in range(5):
-                    try:
-                        resp = _aws_json(
-                            endpoint, host,
-                            "Firehose_20150804.PutRecordBatch",
-                            {"DeliveryStreamName": stream,
-                             "Records": recs},
-                            **kw,
-                        )
-                    except KinesisError as ex:
-                        raise DeliveryError(
-                            str(ex), retryable=ex.status >= 500
-                        ) from ex
-                    if not resp.get("FailedPutCount"):
-                        break
-                    recs = [
-                        rec
-                        for rec, r in zip(
-                            recs, resp["RequestResponses"]
-                        )
-                        if "ErrorCode" in r
-                    ]
-                    time.sleep(0.05 * (attempt + 1))
-                else:
-                    raise DeliveryError(
-                        f"firehose: {len(recs)} records still failing",
-                        retryable=True,
-                    )
+                _put_failed_again(
+                    lambda records: _aws_json(
+                        endpoint, host, "Firehose_20150804.PutRecordBatch",
+                        {"DeliveryStreamName": stream, "Records": records},
+                        **kw,
+                    )["RequestResponses"],
+                    recs,
+                    "firehose",
+                )
 
         def close(self):
             pass
@@ -1694,9 +1643,18 @@ def deliver(
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        transport = TRANSPORTS[backend](conf)
         n_batches = n_ok = n_dead = 0
-        try:
+        # a retryable DeliveryError re-sends on the same transport; a
+        # connection error gets a fresh one
+        with retry.Client(
+            lambda: TRANSPORTS[backend](conf),
+            attempts=retries + 1,
+            backoff_s=backoff_s,
+            resend=lambda ex: isinstance(ex, DeliveryError) and ex.retryable,
+        ) as transport:
+            # built outside the dead-letter branch: a bad host or key
+            # file fails the task instead of dead-lettering every row
+            transport.run(lambda t: t)
             pending: list[str] = []
 
             def flush(chunk: list[str]):
@@ -1714,27 +1672,21 @@ def deliver(
                         )
                         for i, r in enumerate(chunk)
                     ]
-                attempt = 0
-                while True:
-                    try:
-                        transport.send(chunk)
-                        n_ok += len(chunk)
-                        return
-                    except DeliveryError as ex:
-                        attempt += 1
-                        if ex.retryable and attempt <= retries:
-                            time.sleep(backoff_s * attempt)
-                            continue
-                        if dlq_path is None:
-                            raise  # task failure -> Spark retry (at-least-once)
-                        os.makedirs(dlq_path, exist_ok=True)
-                        dead = os.path.join(
-                            dlq_path, f"dead-{pid}-{n_batches:06d}.ndjson"
-                        )
-                        with open(dead, "w") as f:
-                            f.write("\n".join(chunk) + "\n")
-                        n_dead += len(chunk)
-                        return
+                try:
+                    transport.run(lambda t: t.send(chunk))
+                    n_ok += len(chunk)
+                except (DeliveryError, OSError):
+                    # OSError from a send: a connection error that
+                    # outlasted the retries, or one no retry mends
+                    if dlq_path is None:
+                        raise  # task failure -> Spark retry (at-least-once)
+                    os.makedirs(dlq_path, exist_ok=True)
+                    dead = os.path.join(
+                        dlq_path, f"dead-{pid}-{n_batches:06d}.ndjson"
+                    )
+                    with open(dead, "w") as f:
+                        f.write("\n".join(chunk) + "\n")
+                    n_dead += len(chunk)
 
             for b in batches:
                 pending.extend(b["v"].tolist())
@@ -1742,8 +1694,6 @@ def deliver(
                     flush(pending[:batch_size])
                     pending = pending[batch_size:]
             flush(pending)
-        finally:
-            transport.close()
         yield pd.DataFrame(
             [[pid, n_batches, n_ok, n_dead]],
             columns=["partition", "batches", "delivered", "dead"],
@@ -1966,8 +1916,6 @@ def _cypher_transport(conf: dict):
             except BoltError as ex:
                 retryable = ex.code.startswith("Neo.TransientError")
                 raise DeliveryError(str(ex), retryable=retryable) from ex
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
             self.client.close()
@@ -1995,8 +1943,6 @@ def _pulsar_transport(conf: dict):
             try:
                 self.client.send([m.encode("utf-8") for m in batch])
             except PulsarError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
-            except ConnectionError as ex:
                 raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
@@ -2029,8 +1975,6 @@ def _amqp1_transport(conf: dict):
                 self.client.send([m.encode("utf-8") for m in batch])
             except Amqp1Error as ex:
                 raise DeliveryError(str(ex), retryable="rejected" not in str(ex)) from ex
-            except ConnectionError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
             self.client.close()

@@ -30,10 +30,7 @@ def _websocket_transport(conf: dict):
             )
 
         def send(self, batch: list[str]) -> None:
-            try:
-                self.client.send_text(batch)
-            except (ConnectionError, OSError) as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
+            self.client.send_text(batch)
 
         def close(self):
             self.client.close()
@@ -73,7 +70,7 @@ def _nats_kv_transport(conf: dict):
                 pairs.append((key, m))
             try:
                 self.kv.mset(pairs)
-            except (ConnectionError, OSError, RuntimeError) as ex:
+            except RuntimeError as ex:
                 raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
@@ -111,7 +108,7 @@ def _nats_obj_transport(conf: dict):
                     name = f"msg-{abs(hash(m)) % 10**12}"
                 try:
                     self.store.put(name, m.encode("utf-8"))
-                except (ConnectionError, OSError, RuntimeError) as ex:
+                except RuntimeError as ex:
                     raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
@@ -146,8 +143,6 @@ def _grpc_transport(conf: dict):
                     raise DeliveryError(
                         str(ex), retryable=ex.status in (4, 8, 14)
                     ) from ex
-                except (ConnectionError, OSError) as ex:
-                    raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
             self.client.close()
@@ -225,21 +220,18 @@ def _retry_sink(df: DataFrame, is_streaming: bool, conf: dict):
     """`retry` output wrapper (output_retry.go): re-attempt the child
     write with backoff until it succeeds or attempts exhaust. (The
     delivery-loop transports also retry internally per batch; this
-    wrapper covers file/native sinks.)"""
-    import time
+    wrapper covers file/native sinks.) Any child failure is retried,
+    as in the reference."""
+    from bento_spark.retry import attempts
 
     (cname, cconf), = dict(conf["output"]).items()
-    attempts = int(conf.get("max_retries", 3)) + 1
-    backoff = float(conf.get("backoff_s", 0.2))
-    last: Exception | None = None
-    for i in range(attempts):
+    n = int(conf.get("max_retries", 3)) + 1
+    for attempt in attempts(n, float(conf.get("backoff_s", 0.2))):
         try:
             return run_sink(df, is_streaming, cname, cconf)
-        except Exception as ex:  # noqa: BLE001 - child failure, retry
-            last = ex
-            if i + 1 < attempts:
-                time.sleep(backoff * (2**i))
-    raise last  # type: ignore[misc]
+        except Exception:  # noqa: BLE001 - child failure, retry
+            if attempt + 1 == n:
+                raise
 
 
 @register_sink("sync_response")
@@ -337,7 +329,7 @@ def _sftp_transport(conf: dict):
     newline-framed messages to `path` over the from-scratch SSH2/SFTP
     client (operators/ssh_wire.py), creating parent directories like
     the reference's writer. Static path = the reference's lines codec
-    on one remote file; connection failures route retryable."""
+    on one remote file."""
     from posixpath import dirname
 
     from bento_spark.operators.ssh_wire import SSHError, connect_sftp
@@ -364,7 +356,7 @@ def _sftp_transport(conf: dict):
             data = "".join(m + "\n" for m in batch).encode()
             try:
                 self._cli.write_file(conf["path"], data, append=True)
-            except (SSHError, OSError) as ex:
+            except SSHError as ex:
                 raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
@@ -404,8 +396,6 @@ def _s2_transport(conf: dict):
                 raise DeliveryError(
                     str(ex), retryable=ex.status >= 500 or ex.status == 429
                 ) from ex
-            except OSError as ex:
-                raise DeliveryError(str(ex), retryable=True) from ex
 
         def close(self):
             pass

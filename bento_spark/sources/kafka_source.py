@@ -56,38 +56,20 @@ class _Range(InputPartition):
 
 
 def _read_range(part: _Range):
-    import time as _time
-
     from bento_spark.operators.kafka_wire import KafkaProducerClient
+    from bento_spark.retry import Client
 
     if part.start >= part.end:
         return
-    client = KafkaProducerClient(part.host, part.port)
-    # Fetch is a pure read from a replayable log, so a dropped broker
-    # connection (observed rarely under heavy host load: the
-    # ThreadingTCPServer handler's socket dies and the task failed the
-    # whole streaming query at local maxFailures=1) is safely retried
-    # by reconnecting and re-fetching from the current cursor — the
-    # cursor only advances past yielded records, so no record is
-    # skipped or duplicated. Only connection failures are retried; any
-    # other OSError is not transient and surfaces at once.
-    retries = 3
-    try:
+    # Fetch is a pure read from a replayable log, so it is retried on a
+    # fresh connection from the current cursor: the cursor only
+    # advances past yielded records, so none is skipped or duplicated
+    with Client(lambda: KafkaProducerClient(part.host, part.port)) as client:
         offset = part.start
         while offset < part.end:
-            try:
-                records, hw = client.fetch(part.topic, part.partition, offset)
-            except (ConnectionError, TimeoutError):
-                if retries == 0:
-                    raise
-                retries -= 1
-                _time.sleep(0.2)
-                try:
-                    client.close()
-                except Exception:  # noqa: BLE001
-                    pass
-                client = KafkaProducerClient(part.host, part.port)
-                continue
+            records, hw = client.run(
+                lambda c: c.fetch(part.topic, part.partition, offset)
+            )
             if not records:
                 break  # nothing more visible yet
             for off, key, value in records:
@@ -97,8 +79,6 @@ def _read_range(part: _Range):
                     yield (key, value.decode("utf-8", "replace"),
                            part.partition, off)
                 offset = max(offset, off + 1)
-    finally:
-        client.close()
 
 
 class _Common:
@@ -117,40 +97,30 @@ class _Common:
         return sorted(client.metadata(self.topic)["partitions"])
 
     def _offsets(self, client, pids, ts) -> dict[str, int]:
-        # ListOffsets is a pure read — retry a dropped connection once
-        # with a fresh client (same rationale as _read_range)
-        try:
-            return {
-                str(p): client.list_offsets(self.topic, p, ts) for p in pids
-            }
-        except (ConnectionError, TimeoutError):
-            fresh = self._client()
-            try:
-                return {
-                    str(p): fresh.list_offsets(self.topic, p, ts)
-                    for p in pids
-                }
-            finally:
-                fresh.close()
+        return {str(p): client.list_offsets(self.topic, p, ts) for p in pids}
+
+    def _read(self, op):
+        # metadata and ListOffsets are pure reads, safe to retry
+        from bento_spark.retry import Client
+
+        with Client(self._client) as client:
+            return client.run(op)
 
 
 class KafkaStreamReader(_Common, DataSourceStreamReader):
     def initialOffset(self) -> dict:
-        client = self._client()
-        try:
+        def earliest(client):
             pids = self._partition_ids(client)
             if self.start_mode == "zero":
                 return {str(p): 0 for p in pids}
-            return self._offsets(client, pids, -2)  # earliest
-        finally:
-            client.close()
+            return self._offsets(client, pids, -2)
+
+        return self._read(earliest)
 
     def latestOffset(self) -> dict:
-        client = self._client()
-        try:
-            return self._offsets(client, self._partition_ids(client), -1)
-        finally:
-            client.close()
+        return self._read(
+            lambda c: self._offsets(c, self._partition_ids(c), -1)
+        )
 
     def partitions(self, start: dict, end: dict):
         return [
@@ -168,20 +138,20 @@ class KafkaStreamReader(_Common, DataSourceStreamReader):
 
 class KafkaBatchReader(_Common, DataSourceReader):
     def partitions(self):
-        client = self._client()
-        try:
+        def ranges(client):
             pids = self._partition_ids(client)
+            start = (
+                {str(p): 0 for p in pids} if self.start_mode == "zero"
+                else self._offsets(client, pids, -2)
+            )
+            end = self._offsets(client, pids, -1)
             return [
-                _Range(
-                    self.host, self.port, self.topic, p,
-                    0 if self.start_mode == "zero"
-                    else client.list_offsets(self.topic, p, -2),
-                    client.list_offsets(self.topic, p, -1),
-                )
+                _Range(self.host, self.port, self.topic, p,
+                       start[str(p)], end[str(p)])
                 for p in pids
             ]
-        finally:
-            client.close()
+
+        return self._read(ranges)
 
     def read(self, partition: _Range):
         yield from _read_range(partition)

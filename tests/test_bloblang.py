@@ -301,10 +301,11 @@ def test_type_on_variant_receiver_dispatches_per_value(spark):
 def test_length_on_variant_content_counts_elements(spark, tmp_path):
     """`.length()` over raw JSON content (a VARIANT receiver) counts the
     elements of arrays and objects and the characters of strings, not
-    the value's JSON text (`["blue","new"]` read 14)."""
+    the value's JSON text (`["blue","new"]` read 14). A number has no
+    length: the mapping fails, as in the interpreter."""
     from bento_spark.plans.pipeline import build_pipeline
 
-    docs = ['["blue","new"]', '{"a":1,"b":2}', '"blue"']
+    docs = ['["blue","new"]', '{"a":1,"b":2}', '"blue"', '5']
     src = tmp_path / "in.jsonl"
     src.write_text("".join(
         f'{{"id":{i},"tags":{d}}}\n' for i, d in enumerate(docs)
@@ -317,8 +318,9 @@ def test_length_on_variant_content_counts_elements(spark, tmp_path):
         ]},
         "output": {"parquet": {"path": str(out)}},
     }).run()
-    got = {r.id: r.n for r in spark.read.parquet(str(out)).collect()}
-    assert got == {0: 2, 1: 2, 2: 4}
+    rows = {r.id: r for r in spark.read.parquet(str(out)).collect()}
+    assert {i: rows[i].n for i in range(3)} == {0: 2, 1: 2, 2: 4}
+    assert [i for i, r in rows.items() if r._error is not None] == [3]
 
 
 def test_deletion_idioms_about_md(spark):

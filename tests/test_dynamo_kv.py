@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import re
+import time
 from http.server import BaseHTTPRequestHandler
 
 import pytest
@@ -71,7 +72,10 @@ class _Handler(BaseHTTPRequestHandler):
             if len(keys) > 100:
                 return self._reject(400, "ValidationException", ">100 keys")
             srv.get_batches.append(len(keys))
-            if srv.defer_first_get and len(srv.get_batches) == 1:
+            srv.get_times.append(time.monotonic())
+            if srv.defer_all_gets:
+                served, deferred = [], keys
+            elif srv.defer_first_get and len(srv.get_batches) == 1:
                 served, deferred = keys[: len(keys) // 2], keys[len(keys) // 2 :]
             else:
                 served, deferred = keys, []
@@ -116,6 +120,8 @@ class _Server(HttpServer):
         self.data: dict[str, str] = {}
         self.get_batches: list[int] = []
         self.put_batches: list[int] = []
+        self.get_times: list[float] = []
+        self.defer_all_gets = False
         self.defer_first_get = False
         self.defer_first_put = False
         super().__init__(_Handler)
@@ -153,6 +159,21 @@ def test_unprocessed_keys_are_retried(server):
     kv.mset([(f"k{i}", str(i)) for i in range(40)])
     assert kv.mget([f"k{i}" for i in range(40)]) == [str(i) for i in range(40)]
     assert len(server.get_batches) >= 2  # second call for the deferred half
+
+
+def test_keys_never_processed_raise_after_the_bound(server):
+    """A table that never processes a key: mget gives up after the
+    policy's attempt bound, waiting the backoff between rounds."""
+    from bento_spark import retry
+
+    server.defer_all_gets = True
+    with pytest.raises(RuntimeError, match="3 keys still unprocessed"):
+        _kv(server).mget(["a", "b", "c"])
+    assert len(server.get_batches) == retry.ATTEMPTS
+    gaps = [b - a for a, b in zip(server.get_times, server.get_times[1:])]
+    for attempt, gap in enumerate(gaps, 1):
+        # the jitter factor is at least 0.5
+        assert gap >= 0.5 * retry.BACKOFF_S * 2 ** (attempt - 1)
 
 
 def test_unprocessed_items_are_retried(server):

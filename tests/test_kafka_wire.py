@@ -207,6 +207,58 @@ def test_list_offsets_does_not_retry_non_connection_errors(denied_client):
     assert denied_client.built == 1
 
 
+class _DeniedOffsetsClient(_DeniedClient):
+    def metadata(self, topic):
+        return {"partitions": {0: None}}
+
+
+def test_offset_reads_do_not_retry_non_connection_errors(monkeypatch):
+    import bento_spark.operators.kafka_wire as kw
+    from bento_spark.sources.kafka_source import (
+        KafkaBatchReader,
+        KafkaStreamReader,
+    )
+
+    monkeypatch.setattr(kw, "KafkaProducerClient", _DeniedOffsetsClient)
+    for read in (
+        KafkaStreamReader({"topic": "t1"}).initialOffset,
+        KafkaStreamReader({"topic": "t1"}).latestOffset,
+        KafkaBatchReader({"topic": "t1"}).partitions,
+    ):
+        monkeypatch.setattr(_DeniedClient, "built", 0)
+        with pytest.raises(PermissionError):
+            read()
+        assert _DeniedClient.built == 1
+
+
+def test_offset_reads_reconnect_after_a_dropped_connection(broker, monkeypatch):
+    """The first client's ListOffsets loses its connection; the read is
+    retried on a fresh client."""
+    import bento_spark.operators.kafka_wire as kw
+    from bento_spark.sources.kafka_source import KafkaStreamReader
+
+    c = KafkaProducerClient(port=broker.port)
+    c.produce("t1", 0, [(None, b"a"), (None, b"b")])
+    c.close()
+    built = []
+
+    class Dropping(KafkaProducerClient):
+        def __init__(self, *a, **k):
+            super().__init__(*a, **k)
+            built.append(self)
+
+        def list_offsets(self, *a):
+            if len(built) == 1:
+                raise ConnectionResetError("reset by peer")
+            return super().list_offsets(*a)
+
+    monkeypatch.setattr(kw, "KafkaProducerClient", Dropping)
+    reader = KafkaStreamReader({"topic": "t1", "port": broker.port,
+                                "host": "127.0.0.1"})
+    assert reader.latestOffset() == {"0": 2, "1": 0, "2": 0}
+    assert len(built) == 2
+
+
 def test_spark_batch_read_bento_kafka(spark, broker):
     from bento_spark.operators.kafka_wire import KafkaProducerClient as KPC
     from bento_spark.sources.kafka_source import register

@@ -94,6 +94,11 @@ class _Handler(socketserver.StreamRequestHandler):
                 cmd = self._read_command()
             if cmd is None:
                 return
+            with srv.lock:
+                if srv.drops:
+                    # hang up without a reply, as a reset peer does
+                    srv.drops -= 1
+                    return
             name = cmd[0].upper()
             with srv.lock:
                 if name == "PING":
@@ -222,6 +227,7 @@ class _Server(TcpServer):
         self.hashes: dict[str, dict[str, str]] = {}
         self.pubsub: dict[str, list[str]] = {}
         self.xadd_seq = 0
+        self.drops = 0  # connections to drop at their next command
         self.lock = threading.RLock()
         super().__init__(_Handler)
 
@@ -401,3 +407,18 @@ def test_deliver_to_redis_list_via_spark(spark, server, tmp_path):
     assert len(server.lists["spark"]) == 40
     n = RedisListBridge(_client(server), "spark").drain(str(tmp_path / "s"))
     assert n == 40
+
+
+def test_deliver_reconnects_after_a_dropped_connection(spark, server):
+    """The server drops the first RPUSH's connection. The delivery loop
+    re-sends on a fresh transport, not on the closed socket."""
+    from bento_spark.sinks.connector import deliver
+
+    server.drops = 1
+    df = spark.range(40).coalesce(1)
+    stats = deliver(
+        df, "redis_list", {"port": server.port, "key": "d"}, batch_size=16
+    )
+    assert stats["delivered"] == 40 and stats["dead"] == 0
+    got = sorted(json.loads(v)["id"] for v in server.lists["d"])
+    assert got == list(range(40))
