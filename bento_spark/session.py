@@ -6,6 +6,37 @@ splitting, partition coalescing), Arrow on (fast Pandas-UDF boundary),
 UTC session timezone (stable semantics vs the DuckDB oracle and across
 clusters), and shuffle partitions sized by env rather than the 200 default.
 
+Listing input files on the driver
+---------------------------------
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` is set to
+``2147483647``, so no read lists its paths with a Spark job. At Spark's
+default (32), an ``InMemoryFileIndex`` over more paths runs a job with
+one task per path to stat them. A file stream pays that at every
+trigger of more than 32 files: ``FileStreamSource.getBatch`` builds a
+``DataSource`` over the trigger's file list, and its index stats again
+the files the source has just listed. A batch read over a glob or
+directory of many files pays it once. ``get_spark`` only builds
+``local[N]`` sessions, where the job runs on the same N cores as the
+driver would and adds scheduling and per-task cost. Every file input
+(``json``, ``parquet``, ``csv``, ``file``, glob paths included) gets
+this through ``sources._load``, in both modes. Sessions not built by
+``get_spark`` keep Spark's default. The setting cannot be scoped to a
+stream's start: the source reads it from the caller's session at every
+trigger, not from the query's clone.
+
+Measured on 4 vCPU, Spark 4.1.2, in one JVM, alternating the default
+and the raised threshold:
+
+- draining ``perfbench``'s ``stream_window`` backlog (160 files, 40 per
+  trigger, four triggers), three drains each: 9 jobs / 216 tasks -> 5
+  jobs / 56 tasks per drain; ``getBatch`` 271-371 ms -> 12-21 ms per
+  trigger; drain rate 18.9k-26.0k -> 31.1k-41.5k rows/s.
+- ``spark.read.schema(..).json("<dir>/*.json")`` over 2,000 one-line
+  local files, ten reads each: building the DataFrame took 8.8-14.6 s
+  -> 0.19-0.28 s; the ``count()`` after it 0.9-4.4 s -> 0.9-1.2 s.
+- ``stream_window``'s paced triggers read at most 14 files, so they
+  never ran the job.
+
 Class-data sharing for the driver JVM
 -------------------------------------
 Most of a cold session start is the driver JVM loading and linking the
@@ -43,6 +74,15 @@ this host:
   skipped classes (signed janino jar, pre-JDK-6 class files, unlinked
   classes) while recording a bare session, and "Unable to use shared
   archive" (tagged ``cds,dynamic``) when an archive does not match.
+- Refusal: an archive recorded under another class path (the cache dir
+  moved, a ``spark.driver.extraClassPath``) matches its stamp, but the
+  JVM maps it, finds the class paths differ and drops it, at every
+  start: 3.17 s for such a start against 1.56 s with the archive in use.
+  So a launch with the archive writes its ``cds`` log to
+  ``<key>.<pid>.log`` in the cache; once the JVM is up the log is read
+  and deleted, and unless it shows the top ("dynamic") archive mapped
+  and kept, the archive and its stamp are deleted and the next start
+  records them again.
 
 Measured on 4 vCPU, JDK 17.0.20, Spark 4.1.2: full ``perfbench/run.py``
 runs alternating with the code before the archive, archive cache warm:
@@ -108,6 +148,8 @@ def get_spark(app_name: str = "bento_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # list input files on the driver (see the module docstring)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "2147483647")
         # long sessions compile hundreds of codegen classes; the JVM
         # default code cache (~240 MB) fills and disables the JIT, which
         # silently 5-10x-es late queries — give it headroom
@@ -222,9 +264,15 @@ class _CdsLaunch:
         self.cache, self.key, self.lock = cache, key, lock
         self.archive = os.path.join(cache, key + ".jsa")
         self.part = os.path.join(cache, key + ".part")
-        flag = (f"-XX:ArchiveClassesAtExit={self.part}" if lock is not None
-                else f"-XX:SharedArchiveFile={self.archive}")
-        self.options = [flag, "-Xlog:cds*=off"]
+        if lock is not None:
+            self.options = [f"-XX:ArchiveClassesAtExit={self.part}", "-Xlog:cds*=off"]
+        else:
+            # the mapping log goes to a file, never to stdout
+            self.log = os.path.join(cache, f"{key}.{os.getpid()}.log")
+            self.options = [f"-XX:SharedArchiveFile={self.archive}", "-Xlog:cds*=off",
+                            f"-Xlog:cds,cds+dynamic=info:file={self.log}:none:filecount=0"]
+            st = os.stat(self.archive)
+            self.identity = (st.st_ino, st.st_mtime_ns)
         self.pid = os.getpid()
         self.proc = None
         self.finishing = threading.Lock()  # a wait and interpreter exit may race
@@ -241,12 +289,35 @@ class _CdsLaunch:
                 del os.environ["SPARK_CONF_DIR"]
             else:
                 os.environ["SPARK_CONF_DIR"] = saved
-            if self.lock is not None:
+            if self.lock is None:
+                self._drop_if_refused()
+            else:
                 gateway = SparkContext._gateway
                 if gateway is not None and gateway.proc is not None:
                     self._watch(gateway.proc)
                 else:
                     self._finish(None)
+
+    def _drop_if_refused(self) -> None:
+        """Delete the archive when the JVM did not map it, so that the next
+        start records one again: an archive recorded under another class
+        path (the cache dir moved, a ``spark.driver.extraClassPath``)
+        matches its stamp, and the JVM refuses it at every start."""
+        try:
+            with open(self.log, encoding="utf-8", errors="replace") as f:
+                text = f.read()
+        except OSError:
+            return
+        finally:
+            _unlink(self.log)
+        if "Mapped dynamic region" in text and "top archive failed" not in text:
+            return
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return
+        if (st.st_ino, st.st_mtime_ns) == self.identity:  # not recorded anew meanwhile
+            _unlink(self.archive, os.path.join(self.cache, self.key + ".ok"))
 
     def _watch(self, proc) -> None:
         """Promote the archive when a wait on the JVM returns, so a caller
@@ -324,8 +395,9 @@ def _cds_launch() -> _CdsLaunch | None:
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     cache = _cds_dir()
-    # the options travel space-separated in spark.driver.extraJavaOptions
-    if java is None or cache is None or any(c.isspace() or c in "'\"" for c in cache):
+    # the options travel space-separated in spark.driver.extraJavaOptions,
+    # and -Xlog splits its file name at ':' and expands '%'
+    if java is None or cache is None or any(c.isspace() or c in "'\":%" for c in cache):
         return None
     try:
         if os.path.exists(conf) and any(not n.endswith(".template") for n in os.listdir(conf)):
@@ -352,7 +424,7 @@ def _cds_launch() -> _CdsLaunch | None:
             training._finish(None)
             return _CdsLaunch(cache, key)
         for name in os.listdir(cache):
-            if name.endswith((".jsa", ".ok", ".part", ".tmp")):
+            if name.endswith((".jsa", ".ok", ".part", ".tmp", ".log")):
                 _unlink(os.path.join(cache, name))
     except OSError:
         training._finish(None)

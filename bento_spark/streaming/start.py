@@ -56,10 +56,8 @@ runs at sf0.01).
 A file stream source holds the session that built its DataFrame, not
 the query's clone, and builds its metadata log in the query thread
 after ``.start()`` returns, so the scope waits for that before it
-restores. For the same reason no conf scoped to the start reaches the
-source's per-trigger file listing
-(``spark.sql.sources.parallelPartitionDiscovery.threshold``): that one
-is read from the caller's session at every trigger.
+restores. The source's per-trigger file listing is set on the session
+instead (``bento_spark/session.py``).
 
 The confs are set under one process-wide lock, so two threads starting
 queries at once cannot restore each other's values into the session.

@@ -85,9 +85,10 @@ def _mode(res: dict) -> str:
 
 
 def _assert_promoted(cache) -> str:
-    """One finished archive that matches its stamp; no lock or part left."""
+    """One finished archive that matches its stamp; no lock, part or
+    mapping log left."""
     names = os.listdir(_cds(cache))
-    assert not [n for n in names if n.endswith((".lock", ".part", ".tmp"))], names
+    assert not [n for n in names if n.endswith((".lock", ".part", ".tmp", ".log"))], names
     (archive,) = [n for n in names if n.endswith(".jsa")]
     st = os.stat(os.path.join(_cds(cache), archive))
     with open(os.path.join(_cds(cache), archive[:-4] + ".ok")) as f:
@@ -136,6 +137,11 @@ def test_archive_that_does_not_match_keeps_stdout_clean(trained, tmp_path):
     archive = _copy_archive(trained, tmp_path / "cache")
     res = _run(tmp_path / "cache", tmp_path / "cwd")
     assert res["cds"][0] == f"-XX:SharedArchiveFile={archive}"
+    # the refused archive is deleted, so the next start records one
+    names = os.listdir(_cds(tmp_path / "cache"))
+    assert not [n for n in names if n.endswith((".jsa", ".ok", ".log"))], names
+    assert _mode(_run(tmp_path / "cache", tmp_path / "cwd")) == "train"
+    assert _assert_promoted(tmp_path / "cache") == os.path.basename(archive)
 
 
 @pytest.mark.parametrize("damage", ["truncated", "junk"])
