@@ -9,6 +9,7 @@ import os
 import socketserver
 import struct
 import threading
+import time
 
 import pytest
 
@@ -146,7 +147,11 @@ def test_sub_drain_with_subscription(tmp_path):
                 open(os.path.join(out, f), "rb").read().splitlines()
             )
         assert lines == [b"news\x1fhello", b"news\x1fworld"]
-        # the subscription frame reached the publisher
+        # the subscription frame reached the publisher; its handler
+        # thread records it after sending, so wait for the record
+        deadline = time.monotonic() + 10
+        while (0x00, b"\x01news") not in peer.frames and time.monotonic() < deadline:
+            time.sleep(0.01)
         assert (0x00, b"\x01news") in peer.frames
     finally:
         peer.stop()
