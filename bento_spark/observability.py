@@ -453,35 +453,3 @@ def default_registry() -> MetricsRegistry:
     if _DEFAULT is None:
         _DEFAULT = MetricsRegistry()
     return _DEFAULT
-
-
-def flush_metrics(conf: dict, registry: MetricsRegistry | None = None) -> int:
-    """Flush a registry through the configured emitter — the `metrics:`
-    config section ({logger: {}} | {statsd: {host, port}} |
-    {influxdb: {host, port}} | {aws_cloudwatch: {endpoint, ...}} |
-    {none: {}}); the serving emitters (prometheus/json_api) are
-    long-lived servers constructed directly instead."""
-    reg = registry or default_registry()
-    (name, c), = conf.items()
-    c = c or {}
-    if name == "none":
-        return 0
-    if name == "logger":
-        import logging
-
-        log = logging.getLogger("bento_spark.metrics")
-        return logger_flush(reg, log.info)
-    if name == "statsd":
-        return statsd_flush(reg, c.get("host", "localhost"), int(c["port"]))
-    if name == "influxdb":
-        return influxdb_flush(
-            reg, c.get("host", "localhost"), int(c["port"]),
-            c.get("measurement", "bento"),
-        )
-    if name == "aws_cloudwatch":
-        return cloudwatch_flush(
-            reg, c["endpoint"], c.get("namespace", "Bento"),
-            c.get("region", "us-east-1"),
-            c.get("access_key", "local"), c.get("secret_key", "local"),
-        )
-    raise ValueError(f"unknown metrics emitter {name!r}")

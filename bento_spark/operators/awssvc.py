@@ -13,17 +13,17 @@ Reference parity:
 * aws_bedrock_invoke    — internal/impl/aws/processor_bedrock_invoke.go
   (bedrock-runtime InvokeModel: POST /model/{id}/invoke).
 
-Spark shape: one HTTPS connection pool per partition via mapInPandas;
-requests for lambda/bedrock run on a bounded thread pool (they are
-independent RPCs, like operators/http.py), PartiQL batches ride the
-protocol's own 25-statement batching. Failures land in `_error`."""
+Spark shape: lambda/bedrock requests are independent RPCs, so they run
+through `envelope.per_message` on a bounded per-partition thread pool
+(like operators/http.py); PartiQL batches ride the protocol's own
+25-statement batching in a mapInPandas stage. Failures land in
+`_error`."""
 
 from __future__ import annotations
 
 import json
 import time
 from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -77,16 +77,6 @@ def _signed_call(
     return transport("POST", endpoint.rstrip("/") + path, body, headers)
 
 
-def _with_error_col(pdf: pd.DataFrame, out, errs, out_col: str, ERROR: str):
-    pdf = pdf.copy()
-    pdf[out_col] = pd.array(out, dtype=object)
-    prev = pdf[ERROR].tolist()
-    pdf[ERROR] = pd.array(
-        [e if e is not None else p for e, p in zip(errs, prev)], dtype=object
-    )
-    return pdf
-
-
 def lambda_invoke_enrich(
     df: DataFrame,
     endpoint: str,
@@ -102,40 +92,26 @@ def lambda_invoke_enrich(
     """`aws_lambda` processor: invoke per message, response payload in
     ``out_col``; a function error (X-Amz-Function-Error header) or non-2xx
     flags `_error` for that row only."""
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
+    from bento_spark.operators.envelope import MessageError, per_message
 
-    df = ensure_envelope(df)
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
     path = f"/2015-03-31/functions/{function_name}/invocations"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with ThreadPoolExecutor(max_workers=max_conc) as pool:
-            for pdf in batches:
-                def call(body: str):
-                    try:
-                        status, rh, text = _signed_call(
-                            transport, endpoint, path,
-                            body.encode("utf-8"), "lambda", region,
-                            access_key, secret_key,
-                        )
-                        fn_err = {k.lower(): v for k, v in rh.items()}.get(
-                            "x-amz-function-error"
-                        )
-                        if fn_err:
-                            return None, f"lambda function error ({fn_err}): {text[:200]}"
-                        if status >= 300:
-                            return None, f"lambda HTTP {status}: {text[:200]}"
-                        return text, None
-                    except Exception as e:  # noqa: BLE001
-                        return None, f"lambda: {e}"
+    def call(row):
+        status, rh, text = _signed_call(
+            transport, endpoint, path, str(row[body_col]).encode("utf-8"),
+            "lambda", region, access_key, secret_key,
+        )
+        fn_err = {k.lower(): v for k, v in rh.items()}.get("x-amz-function-error")
+        if fn_err:
+            raise MessageError(f"lambda function error ({fn_err}): {text[:200]}")
+        if status >= 300:
+            raise MessageError(f"lambda HTTP {status}: {text[:200]}")
+        return text
 
-                results = list(pool.map(call, pdf[body_col].astype(str).tolist()))
-                yield _with_error_col(
-                    pdf, [r[0] for r in results], [r[1] for r in results],
-                    out_col, ERROR,
-                )
-
-    return df.mapInPandas(gen, schema)
+    return per_message(
+        df, call, out=out_col, skip_errored=False, threads=max_conc,
+        errors={Exception: lambda ex: f"lambda: {ex}"},
+    )
 
 
 def dynamodb_partiql(
@@ -202,7 +178,13 @@ def dynamodb_partiql(
                     n = len(stmts[i : i + CHUNK])
                     out.extend([None] * n)
                     errs.extend([f"partiql: {e}"] * n)
-            yield _with_error_col(pdf, out, errs, out_col, ERROR)
+            pdf = pdf.copy()
+            pdf[out_col] = pd.array(out, dtype=object)
+            pdf[ERROR] = pd.array(
+                [e if e is not None else p for e, p in zip(errs, pdf[ERROR])],
+                dtype=object,
+            )
+            yield pdf
 
     return df.mapInPandas(gen, schema)
 
@@ -224,35 +206,23 @@ def bedrock_invoke_enrich(
     message), response JSON in ``out_col``."""
     from urllib.parse import quote
 
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
+    from bento_spark.operators.envelope import MessageError, per_message
 
-    df = ensure_envelope(df)
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
     path = f"/model/{quote(model_id, safe='')}/invoke"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with ThreadPoolExecutor(max_workers=max_conc) as pool:
-            for pdf in batches:
-                def call(body: str):
-                    try:
-                        status, _rh, text = _signed_call(
-                            transport, endpoint, path,
-                            body.encode("utf-8"), "bedrock", region,
-                            access_key, secret_key,
-                        )
-                        if status >= 300:
-                            return None, f"bedrock HTTP {status}: {text[:200]}"
-                        return text, None
-                    except Exception as e:  # noqa: BLE001
-                        return None, f"bedrock: {e}"
+    def call(row):
+        status, _rh, text = _signed_call(
+            transport, endpoint, path, str(row[body_col]).encode("utf-8"),
+            "bedrock", region, access_key, secret_key,
+        )
+        if status >= 300:
+            raise MessageError(f"bedrock HTTP {status}: {text[:200]}")
+        return text
 
-                results = list(pool.map(call, pdf[body_col].astype(str).tolist()))
-                yield _with_error_col(
-                    pdf, [r[0] for r in results], [r[1] for r in results],
-                    out_col, ERROR,
-                )
-
-    return df.mapInPandas(gen, schema)
+    return per_message(
+        df, call, out=out_col, skip_errored=False, threads=max_conc,
+        errors={Exception: lambda ex: f"bedrock: {ex}"},
+    )
 
 
 def _register() -> None:

@@ -273,43 +273,19 @@ def cosmosdb_enrich(
     """`azure_cosmosdb` processor: run a parameterized query per message
     (parameters from row columns), results JSON-encoded in ``out_col``;
     failures flag `_error`."""
-    from collections.abc import Iterator
+    from bento_spark.operators.envelope import per_message
 
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructType
+    def call(client, row):
+        params = [
+            {"name": name, "value": str(row[c])}
+            for name, c in param_cols.items()
+        ]
+        return json.dumps(client.query_documents(query, params), sort_keys=True)
 
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
-
-    df = ensure_envelope(df)
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = factory()
-        for pdf in batches:
-            out, errs = [], []
-            for _, row in pdf.iterrows():
-                params = [
-                    {"name": name, "value": str(row[c])}
-                    for name, c in param_cols.items()
-                ]
-                try:
-                    out.append(json.dumps(
-                        client.query_documents(query, params), sort_keys=True
-                    ))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    out.append(None)
-                    errs.append(f"cosmosdb: {e}")
-            pdf = pdf.copy()
-            pdf[out_col] = pd.array(out, dtype=object)
-            prev = pdf[ERROR].tolist()
-            pdf[ERROR] = pd.array(
-                [e if e is not None else p for e, p in zip(errs, prev)],
-                dtype=object,
-            )
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
+    return per_message(
+        df, call, out=out_col, open=factory, skip_errored=False,
+        errors={Exception: lambda ex: f"cosmosdb: {ex}"},
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -372,15 +372,6 @@ def parse_clf(df: DataFrame, col: str) -> DataFrame:
     return out
 
 
-def grok_extract(df: DataFrame, col: str, pattern: str, fields: list[tuple[str, int, str]]) -> DataFrame:
-    """grok-style: one compiled regex, named capture groups by index
-    (grok patterns compile down to exactly this shape)."""
-    out = df
-    for name, idx, typ in fields:
-        out = out.withColumn(name, F.regexp_extract(F.col(col), pattern, idx).cast(typ))
-    return out
-
-
 # ---- syslog parse_log (processor_parse_log.go:105) -----------------------
 
 # RFC3164: <PRI>Mmm dd HH:MM:SS host tag[pid]: msg

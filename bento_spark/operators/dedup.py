@@ -26,14 +26,12 @@ aggregates over the exploded (doc, hash) pairs, not k HOF transforms.
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bento_spark.functions.hashing import fast_hash64, hash60
-from bento_spark.functions.textops import exploded_word_shingles, word_shingles
+from bento_spark.functions.textops import exploded_word_shingles
 from bento_spark.functions.vectors import as_double, cosine
 
 MERSENNE31 = (1 << 31) - 1
@@ -379,38 +377,6 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b", F.round(j, 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def with_simhash(
-    df: DataFrame,
-    text_col: str,
-    out_col: str = "sig",
-    n: int = 3,
-    bits: int = 32,
-    hasher: str = "portable",
-) -> DataFrame:
-    """Add a SimHash column: bit j of the signature is the sign of the
-    sum of +-1 votes from bit j of each distinct shingle's hash. One
-    base hash per shingle, materialized before the per-bit aggregates."""
-    base = _base_hash(hasher, "sim")
-    tmp = ensure_parallelism(df).withColumn(
-        "__hs", F.transform(word_shingles(F.col(text_col), n), base)
-    )
-
-    def vote(j: int):
-        return lambda acc, x: acc + F.when(
-            F.shiftright(x, j).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    terms = [
-        F.when(
-            F.aggregate(F.col("__hs"), F.lit(0).cast("long"), vote(j)) > 0,
-            F.lit(1 << j).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for j in range(bits)
-    ]
-    sig = reduce(lambda x, y: x + y, terms)
-    return tmp.withColumn(out_col, sig).drop("__hs")
 
 
 def simhash_pairs(

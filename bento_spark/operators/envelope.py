@@ -22,8 +22,12 @@ mapping whose shape is known; fully-dynamic pipelines can keep VARIANT.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 META = "_metadata"
 ERROR = "_error"
@@ -49,6 +53,111 @@ def guard(df: DataFrame, col: str, expr: Column) -> Column:
     """Error-transparent assignment: leave failed rows untouched."""
     prev = F.col(col) if col in df.columns else F.lit(None)
     return F.when(ok(df), expr).otherwise(prev)
+
+
+class MessageError(Exception):
+    """One message failed; its text becomes that row's ``_error``."""
+
+
+def per_message(
+    df: DataFrame,
+    call: Callable,
+    *,
+    out: str | StructType | None = "content",
+    open: Callable[[], Any] | None = None,
+    skip_errored: bool = True,
+    threads: int = 0,
+    errors: dict | None = None,
+) -> DataFrame:
+    """Run ``call`` once per message in an Arrow-batched stage, with the
+    reference's per-message error channel.
+
+    ``call(row)`` gets the row as a dict (``_metadata`` a dict, or None)
+    and returns the new value of ``out``: a column name for one string
+    column, a StructType for several columns (``call`` returns a tuple),
+    or None for no result column. An existing column is replaced in
+    place, a new one is appended. A call may assign ``row[META]`` to
+    change the message's metadata; the map crosses the Arrow boundary
+    as a dict both ways.
+
+    A call that raises :class:`MessageError`, or an exception matching
+    a key of ``errors`` (a type or tuple of types, mapping to a function
+    that renders it; default: every exception as ``"<type>: <text>"``),
+    flags the message: ``_error`` takes the text and the row keeps the
+    values it held. Any other exception fails the task.
+
+    ``skip_errored`` decides which messages are called: True skips rows
+    that already carry ``_error`` (they flow on untouched); False calls
+    every row, so a failure replaces the earlier error and a success
+    keeps it. ``open()`` makes the per-partition resource on the first
+    call (``call(resource, row)`` then) and it is closed in a
+    ``finally``. ``threads`` > 0 runs the calls of a partition on a
+    bounded thread pool; 0 runs them in order."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if errors is None:
+        errors = {Exception: lambda ex: f"{type(ex).__name__}: {ex}"}
+    df = ensure_envelope(df)
+    if out is None:
+        fields = []
+    elif isinstance(out, str):
+        fields = [StructField(out, StringType())]
+    else:
+        fields = list(out.fields)
+    names = [f.name for f in fields]
+    new = {f.name: f for f in fields}
+    schema = StructType(
+        [new.pop(f.name, f) for f in df.schema.fields] + list(new.values())
+    )
+    written = [*names, ERROR, META]
+
+    def one(res, row):
+        try:
+            value = call(row) if open is None else call(res, row)
+        except MessageError as ex:
+            row[ERROR] = str(ex)
+            return
+        except Exception as ex:
+            render = next(
+                (f for t, f in errors.items() if isinstance(ex, t)), None
+            )
+            if render is None:
+                raise
+            row[ERROR] = render(ex)
+            return
+        if len(names) == 1:
+            row[names[0]] = value
+        elif names:
+            row.update(zip(names, value))
+
+    def run(batches):
+        res, pool = None, None
+        try:
+            for pdf in batches:
+                rows = pdf.to_dict("records")
+                todo = [
+                    r for r in rows
+                    if not (skip_errored and r[ERROR] is not None)
+                ]
+                if todo and open is not None and res is None:
+                    res = open()
+                if todo and threads and pool is None:
+                    pool = ThreadPoolExecutor(max_workers=threads)
+                if pool is not None:
+                    list(pool.map(lambda r: one(res, r), todo))
+                else:
+                    for r in todo:
+                        one(res, r)
+                for c in written:
+                    pdf[c] = [r.get(c) for r in rows]
+                yield pdf[schema.names]
+        finally:
+            if pool is not None:
+                pool.shutdown()
+            if hasattr(res, "close"):
+                res.close()
+
+    return df.mapInPandas(run, schema)
 
 
 def data_cols(df: DataFrame) -> list[str]:

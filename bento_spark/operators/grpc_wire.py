@@ -438,42 +438,16 @@ def grpc_enrich(
     decoded back to JSON. One connection per partition; gRPC errors
     land in `_error`, never a task failure."""
     import json as _json
-    from collections.abc import Iterator
 
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructType
-
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
+    from bento_spark.operators.envelope import per_message
     from bento_spark.operators.protobuf import pb_decode, pb_encode
 
-    df = ensure_envelope(df)
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
+    def call(client, row):
+        msg = pb_encode(_json.loads(str(row[body_col])), request_schema)
+        resp = client.request(path, msg)
+        return _json.dumps(pb_decode(resp, response_schema), sort_keys=True)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = factory()
-        try:
-            for pdf in batches:
-                out, errs = [], []
-                for body in pdf[body_col].astype(str).tolist():
-                    try:
-                        msg = pb_encode(_json.loads(body), request_schema)
-                        resp = client.request(path, msg)
-                        out.append(_json.dumps(
-                            pb_decode(resp, response_schema), sort_keys=True
-                        ))
-                        errs.append(None)
-                    except (GrpcError, H2Error, ValueError) as e:
-                        out.append(None)
-                        errs.append(f"grpc: {e}")
-                pdf = pdf.copy()
-                pdf[out_col] = pd.array(out, dtype=object)
-                prev = pdf[ERROR].tolist()
-                pdf[ERROR] = pd.array(
-                    [e if e is not None else p for e, p in zip(errs, prev)],
-                    dtype=object,
-                )
-                yield pdf
-        finally:
-            client.close()
-
-    return df.mapInPandas(gen, schema)
+    return per_message(
+        df, call, out=out_col, open=factory, skip_errored=False,
+        errors={(GrpcError, H2Error, ValueError): lambda ex: f"grpc: {ex}"},
+    )

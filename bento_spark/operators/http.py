@@ -2,10 +2,11 @@
 HTTP enrichment, Spark-shaped.
 
 The reference fires one request per message batch; at 100 TB that
-serializes on the network. Here requests run inside mapInPandas with a
-bounded per-partition thread pool — total concurrency =
-partitions x max_conc, back-pressured by Spark's task scheduler, with
-failures flagged on the `_error` column (never a task failure).
+serializes on the network. Here requests run through
+`envelope.per_message` on a bounded per-partition thread pool — total
+concurrency = partitions x max_conc, back-pressured by Spark's task
+scheduler, with failures flagged on the `_error` column (never a task
+failure).
 
 The transport is injectable: production uses urllib (stdlib — the
 `requests` package may be absent); a deterministic fake remains for
@@ -18,10 +19,8 @@ error channel are all exercised live.
 from __future__ import annotations
 
 import json as _json
-from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 Transport = Callable[[str, str, str | None], tuple[int, str]]
@@ -65,67 +64,26 @@ def http_enrich(
     """Per-row HTTP call with bounded per-partition concurrency; adds
     `http_status INT` and `http_response STRING`, and sets `_error`
     instead of failing the task."""
-    from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+    from pyspark.sql.types import IntegerType, StringType, StructType
 
-    df = ensure_envelope(df)
+    from bento_spark.operators.dedup import ensure_parallelism
+    from bento_spark.operators.envelope import per_message
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with ThreadPoolExecutor(max_workers=max_conc) as pool:
-            for pdf in batches:
-                urls = pdf[url_col].tolist()
-                bodies = pdf[body_col].tolist() if body_col else [None] * len(urls)
+    def call(row):
+        body = row[body_col] if body_col else None
+        return transport(method, row[url_col], body)
 
-                def call(args):
-                    url, body = args
-                    try:
-                        status, text = transport(method, url, body)
-                        return status, text, None
-                    except Exception as e:  # noqa: BLE001
-                        return None, None, f"http: {e}"
-
-                chunk = max(1, len(urls) // (max_conc * 8))
-                results = list(pool.map(call, zip(urls, bodies), chunksize=chunk))
-                pdf = pdf.copy()
-                pdf["http_status"] = [r[0] for r in results]
-                pdf["http_response"] = [r[1] for r in results]
-                errs = [r[2] for r in results]
-                prev = pdf[ERROR] if ERROR in pdf else None
-                pdf[ERROR] = [
-                    e if e is not None else (prev.iloc[i] if prev is not None else None)
-                    for i, e in enumerate(errs)
-                ]
-                yield pdf
-
-    # _metadata maps don't round-trip pandas cleanly; carry them as a
-    # JSON string across the Arrow boundary and restore after — the
-    # reference's http processor PRESERVES message metadata (it only
-    # adds response meta), so dropping it here would strip upstream
-    # keys (and the cached processor's stashed join key: ADVICE r6)
-    from pyspark.sql import functions as F
-
-    meta_free = df.withColumn("__meta_json", F.to_json(F.col(META))).drop(META)
-    out_schema = (
-        ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in meta_free.schema.fields
-        )
-        + ", http_status int, http_response string"
-    )
     # One-row-group parquet concentrates every row in a single task, so
     # the bounded pool ran ALL requests from one core while the rest
     # idled (the same funnel as the wasm/text planes — r12 #9/#11).
     # ensure_parallelism spreads only when the scan reads fewer files
     # than defaultParallelism and nothing upstream redistributes — a
     # no-op at cluster file counts, so no hidden corpus-scale exchange.
-    from bento_spark.operators.dedup import ensure_parallelism
-
-    enriched = ensure_parallelism(meta_free).mapInPandas(run, out_schema)
-    return ensure_envelope(
-        enriched.withColumn(
-            META,
-            F.coalesce(
-                F.from_json(F.col("__meta_json"), "map<string,string>"),
-                F.create_map().cast("map<string,string>"),
-            ),
-        ).drop("__meta_json")
+    return per_message(
+        ensure_parallelism(df), call,
+        out=StructType()
+        .add("http_status", IntegerType())
+        .add("http_response", StringType()),
+        skip_errored=False, threads=max_conc,
+        errors={Exception: lambda ex: f"http: {ex}"},
     )

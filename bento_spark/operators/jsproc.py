@@ -17,8 +17,8 @@ stdlib transport — same urllib discipline as the `http` processor,
 bounded to one in-flight request per partition by the lockstep
 protocol itself.
 
-Execution shape: one node process per partition (the
-operators/subproc.py discipline), NDJSON line framing in LOCKSTEP —
+Execution shape: one node process per partition (the per-partition
+resource of ``envelope.per_message``), NDJSON line framing in LOCKSTEP —
 {c: content, m: {meta}} in; zero or more {f: {url, headers, method,
 body}} fetch requests answered with {s: status, b: body} | {err};
 finally {c, m, e} out — so a million-row partition is one child and
@@ -30,7 +30,7 @@ from __future__ import annotations
 import json
 import subprocess as _sp
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 
 _HARNESS = r"""
 const fs = require("fs");
@@ -142,15 +142,67 @@ def _do_fetch(req: dict) -> dict:
         return {"err": f"v0_fetch: {type(ex).__name__}: {ex}"}
 
 
+class _NodeChild:
+    """One node process running the harness over ``code`` (base64), fed
+    one message at a time in lockstep."""
+
+    def __init__(self, b64: str, timeout: float):
+        self.timeout = timeout
+        self.proc = _sp.Popen(
+            ["node", "-e", _HARNESS, "--", b64],
+            stdin=_sp.PIPE, stdout=_sp.PIPE, stderr=_sp.PIPE,
+        )
+
+    def _send(self, obj: dict) -> None:
+        self.proc.stdin.write(json.dumps(obj).encode() + b"\n")
+        self.proc.stdin.flush()
+
+    def _reply(self) -> dict:
+        import select as _select
+
+        # select() watches the fd, not Python's read buffer — safe ONLY
+        # because the protocol is strict lockstep: node writes exactly
+        # one line (fetch request or result) and then blocks reading
+        # stdin, so a second line can never be sitting in the buffer
+        # while the fd is idle. If the protocol ever pipelines, switch
+        # to bufsize=0.
+        ready, _, _ = _select.select([self.proc.stdout], [], [], self.timeout)
+        if not ready:
+            self.proc.kill()
+            raise RuntimeError(f"javascript: no response within {self.timeout}s")
+        line = self.proc.stdout.readline()
+        if not line:
+            err = self.proc.stderr.read().decode(errors="replace")[:500]
+            raise RuntimeError(f"javascript: node exited: {err}")
+        return json.loads(line.decode())
+
+    def run(self, content: str, meta: dict) -> dict:
+        """The script's ``{c, m, e}`` result for one message, answering
+        its fetch-bridge requests on the way."""
+        self._send({"c": content, "m": meta})
+        while "f" in (res := self._reply()):
+            self._send(_do_fetch(res["f"]))
+        return res
+
+    def close(self) -> None:
+        try:
+            self.proc.stdin.close()
+            self.proc.wait(timeout=5)
+        except Exception:  # noqa: BLE001
+            self.proc.kill()
+
+
 def javascript_processor(
     df: DataFrame, code: str, content_col: str = "content", timeout: float = 120.0
 ) -> DataFrame:
     """Run the reference-API JS ``code`` once per message. ``content``
-    is the message body; `_metadata` (if present) is exposed through
-    the meta functions; script errors land in `_error`."""
+    is the message body; `_metadata` is exposed through the meta
+    functions; script errors land in `_error`."""
     import base64
 
-    from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+    from bento_spark.operators.envelope import (
+        META, MessageError, per_message,
+    )
 
     # One node runtime serves each non-empty partition; a one-file
     # input would funnel every row through a single node process while
@@ -159,78 +211,23 @@ def javascript_processor(
     # upstream redistribution).
     from bento_spark.operators.dedup import ensure_parallelism
 
-    df = ensure_parallelism(ensure_envelope(df))
-    has_meta = META in df.columns
-    cols = list(df.columns)
-    schema = df.schema
     b64 = base64.b64encode(code.encode("utf-8")).decode("ascii")
 
-    def run_partition(rows):
-        import select as _select
-
-        rows = list(rows)
-        if not rows:
-            return
-        proc = _sp.Popen(
-            ["node", "-e", _HARNESS, "--", b64],
-            stdin=_sp.PIPE, stdout=_sp.PIPE, stderr=_sp.PIPE,
+    def call(node, row):
+        content = row[content_col]
+        res = node.run(
+            "" if content is None else str(content), dict(row[META] or {})
         )
+        row[META] = res["m"]
+        if res.get("e"):
+            # the script's content edits before the throw are kept
+            row[content_col] = res["c"]
+            raise MessageError(f"javascript: {res['e']}")
+        return res["c"]
 
-        def read_reply_line() -> str:
-            # select() watches the fd, not Python's read buffer — safe
-            # ONLY because the protocol is strict lockstep: node writes
-            # exactly one line (fetch request or result) and then
-            # blocks reading stdin, so a second line can never be
-            # sitting in the buffer while the fd is idle. If the
-            # protocol ever pipelines, switch to bufsize=0.
-            ready, _, _ = _select.select([proc.stdout], [], [], timeout)
-            if not ready:
-                proc.kill()
-                raise RuntimeError(
-                    f"javascript: no response within {timeout}s"
-                )
-            line = proc.stdout.readline()
-            if not line:
-                err = proc.stderr.read().decode(errors="replace")[:500]
-                raise RuntimeError(f"javascript: node exited: {err}")
-            return line.decode()
-
-        try:
-            for r in rows:
-                msg = json.dumps({
-                    "c": "" if r[content_col] is None else str(r[content_col]),
-                    "m": dict(r[META]) if has_meta and r[META] is not None
-                    else {},
-                })
-                proc.stdin.write(msg.encode() + b"\n")
-                proc.stdin.flush()
-                while True:
-                    res = json.loads(read_reply_line())
-                    if "f" in res:  # fetch bridge request
-                        reply = _do_fetch(res["f"])
-                        proc.stdin.write(
-                            json.dumps(reply).encode() + b"\n"
-                        )
-                        proc.stdin.flush()
-                        continue
-                    break
-                vals = {c: r[c] for c in cols}
-                vals[content_col] = res["c"]
-                if has_meta:
-                    vals[META] = res["m"]
-                if res.get("e"):
-                    vals[ERROR] = f"javascript: {res['e']}"
-                # Row kwargs order must match the schema's field order
-                yield Row(**{c: vals[c] for c in cols})
-        finally:
-            try:
-                proc.stdin.close()
-                proc.wait(timeout=5)
-            except Exception:  # noqa: BLE001
-                proc.kill()
-
-    return df.sparkSession.createDataFrame(
-        df.rdd.mapPartitions(run_partition), schema
+    return per_message(
+        ensure_parallelism(df), call, out=content_col,
+        open=lambda: _NodeChild(b64, timeout), skip_errored=False, errors={},
     )
 
 

@@ -247,44 +247,16 @@ def request_reply_enrich(
     partition (request/reply is RPC — parallelism comes from partition
     count, exactly like the reference's per-message loop), timeouts and
     NATS errors land in `_error`, never a task failure."""
-    from collections.abc import Iterator
+    from bento_spark.operators.envelope import per_message
 
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructType
+    def call(client, row):
+        body = str(row[body_col]).encode("utf-8")
+        return client.request(subject, body, timeout=timeout).decode("utf-8")
 
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
-
-    df = ensure_envelope(df)
-    schema = StructType(list(df.schema.fields)).add(out_col, StringType())
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = factory()
-        try:
-            for pdf in batches:
-                out, errs = [], []
-                for body in pdf[body_col].astype(str).tolist():
-                    try:
-                        out.append(
-                            client.request(
-                                subject, body.encode("utf-8"), timeout=timeout
-                            ).decode("utf-8")
-                        )
-                        errs.append(None)
-                    except NatsError as e:
-                        out.append(None)
-                        errs.append(str(e))
-                pdf = pdf.copy()
-                pdf[out_col] = pd.array(out, dtype=object)
-                prev = pdf[ERROR].tolist()
-                pdf[ERROR] = pd.array(
-                    [e if e is not None else p for e, p in zip(errs, prev)],
-                    dtype=object,
-                )
-                yield pdf
-        finally:
-            client.close()
-
-    return df.mapInPandas(gen, schema)
+    return per_message(
+        df, call, out=out_col, open=factory, skip_errored=False,
+        errors={NatsError: str},
+    )
 
 
 def _register() -> None:

@@ -2,7 +2,7 @@
 
 Reference: website/docs/components/processors/python.md (the reference
 embeds a Python interpreter; this engine IS Python, so the script runs
-natively inside an Arrow-batched ``mapInPandas`` stage). Script
+natively inside an Arrow-batched ``envelope.per_message`` stage). Script
 contract, matching the docs examples:
 
 * ``this`` — the parsed document (dict/list/scalar; raw string if the
@@ -21,14 +21,12 @@ as every Pandas-UDF stage; the script compiles ONCE per executor.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 
 def python_processor(df: DataFrame, script: str) -> DataFrame:
-    from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+    from bento_spark.operators.envelope import META, ensure_envelope, per_message
 
     df = ensure_envelope(df)
     if "content" not in df.columns:
@@ -40,43 +38,26 @@ def python_processor(df: DataFrame, script: str) -> DataFrame:
         df = df.withColumn("content", F.to_json(F.struct(*cols))).drop(*cols)
     code = compile(script, "<python processor>", "exec")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_content, out_err = [], []
-            metas = pdf[META] if META in pdf else [{} for _ in range(len(pdf))]
-            for content, meta, err in zip(pdf["content"], metas, pdf[ERROR]):
-                if err is not None:
-                    out_content.append(content)
-                    out_err.append(err)
-                    continue
-                try:
-                    this = json.loads(content) if content else None
-                except (ValueError, TypeError):
-                    this = content
-                root: dict = {}
-                scope = {
-                    "this": this,
-                    "root": root,
-                    "metadata": (meta or {}).get,
-                    "json": json,
-                }
-                try:
-                    exec(code, scope)  # noqa: S102 - the processor IS user code
-                    root = scope["root"]
-                    out_content.append(
-                        json.dumps(root, separators=(",", ":"))
-                        if root else content
-                    )
-                    out_err.append(None)
-                except Exception as ex:  # noqa: BLE001 - per-message error channel
-                    out_content.append(content)
-                    out_err.append(f"python: {type(ex).__name__}: {ex}")
-            pdf = pdf.copy()
-            pdf["content"] = out_content
-            pdf[ERROR] = out_err
-            yield pdf
+    def call(row):
+        content = row["content"]
+        try:
+            this = json.loads(content) if content else None
+        except (ValueError, TypeError):
+            this = content
+        scope = {
+            "this": this,
+            "root": {},
+            "metadata": (row[META] or {}).get,
+            "json": json,
+        }
+        exec(code, scope)  # noqa: S102 - the processor IS user code
+        root = scope["root"]
+        return json.dumps(root, separators=(",", ":")) if root else content
 
-    return df.mapInPandas(run, df.schema)
+    return per_message(
+        df, call,
+        errors={Exception: lambda ex: f"python: {type(ex).__name__}: {ex}"},
+    )
 
 
 def _register() -> None:

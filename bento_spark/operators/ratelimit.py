@@ -162,18 +162,3 @@ class RedisRateLimit:
                 return slept
             self.clock.sleep(wait)
             slept += wait
-
-
-def register_redis_rate_limit(name: str, conf: dict) -> RedisRateLimit:
-    """`rate_limit_resources:` entry with `redis:` backend: {url, count,
-    interval, key_prefix}."""
-    from bento_spark.operators.kvstore import _client_from_url
-
-    rl = RedisRateLimit(
-        _client_from_url(conf["url"]),
-        count=int(conf.get("count", 1000)),
-        interval=float(str(conf.get("interval", 1.0)).rstrip("s")),
-        key_prefix=conf.get("key_prefix", "bento_rl"),
-    )
-    _RESOURCES[name] = rl  # type: ignore[assignment]
-    return rl

@@ -10,18 +10,16 @@ the DSN's public key carried in the ``sentry_key`` query parameter (the
 documented alternative to the X-Sentry-Auth header, which keeps the
 injectable transport's (method, url, body) shape).
 
-Spark shape: events are batched per Arrow batch and POSTed from each
-partition on a bounded pool; capture failures set `_error` on the rows
-whose events failed — the stream itself never aborts on telemetry."""
+Spark shape: one event POST per message through `envelope.per_message`;
+capture failures set `_error` on the rows whose events failed — the
+stream itself never aborts on telemetry."""
 
 from __future__ import annotations
 
 import json
 import time
 import uuid
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from bento_spark.operators.http import Transport, urllib_transport
@@ -61,45 +59,29 @@ def sentry_capture(
     url = f"{store_url}?sentry_key={key}&sentry_version=7"
     tags_cols = tags_cols or {}
 
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
+    from bento_spark.operators.envelope import MessageError, per_message
 
-    df = ensure_envelope(df)
-    schema = df.schema
+    def call(row):
+        event = {
+            "event_id": uuid.uuid4().hex,
+            "timestamp": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "platform": "python",
+            "level": level,
+            "message": str(row[message_col]),
+            "tags": {t: str(row[c]) for t, c in tags_cols.items()},
+        }
+        if environment:
+            event["environment"] = environment
+        if release:
+            event["release"] = release
+        status, _body = transport("POST", url, json.dumps(event))
+        if status >= 300:
+            raise MessageError(f"sentry HTTP {status}")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            errs = []
-            for _, row in pdf.iterrows():
-                event = {
-                    "event_id": uuid.uuid4().hex,
-                    "timestamp": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "platform": "python",
-                    "level": level,
-                    "message": str(row[message_col]),
-                    "tags": {t: str(row[c]) for t, c in tags_cols.items()},
-                }
-                if environment:
-                    event["environment"] = environment
-                if release:
-                    event["release"] = release
-                try:
-                    status, _body = transport("POST", url, json.dumps(event))
-                    errs.append(
-                        None if status < 300 else f"sentry HTTP {status}"
-                    )
-                except Exception as e:  # noqa: BLE001
-                    errs.append(f"sentry: {e}")
-            pdf = pdf.copy()
-            prev = pdf[ERROR].tolist()
-            pdf[ERROR] = pd.array(
-                [e if e is not None else p for e, p in zip(errs, prev)],
-                dtype=object,
-            )
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
+    return per_message(
+        df, call, out=None, skip_errored=False,
+        errors={Exception: lambda ex: f"sentry: {ex}"},
+    )
 
 
 def _register() -> None:

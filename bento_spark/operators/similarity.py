@@ -111,15 +111,6 @@ def _chain_dots(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _chain_l2(V: np.ndarray) -> np.ndarray:
-    """Row-wise sum of squares with the same left-assoc accumulation as
-    ``l2sq_expr`` (bit-identical doubles)."""
-    acc = V[:, 0] * V[:, 0]
-    for i in range(1, V.shape[1]):
-        acc = acc + V[:, i] * V[:, i]
-    return acc
-
-
 def lsh_bucket(vec_name: str, planes: list[list[float]]) -> Column:
     """Sign-LSH bucket id as ONE inline expression: bit j =
     (vec · plane_j) > 0 over literal multiply-add chains. Reference

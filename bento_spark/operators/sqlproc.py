@@ -207,10 +207,8 @@ def sql_raw_driver(df: DataFrame, conf: dict) -> DataFrame:
     frame coalesces to one partition — the reference's
     ``conn_max_open: 1`` analog; ``:memory:`` keeps full parallelism
     (each partition owns its seeded copy)."""
-    from collections.abc import Iterator
-
     from bento_spark.bloblang import compile_expr
-    from bento_spark.operators.envelope import ERROR, ensure_envelope
+    from bento_spark.operators.envelope import ensure_envelope, per_message
     from bento_spark.plans.pipeline import _lift_content
 
     df = _lift_content(ensure_envelope(df))
@@ -244,7 +242,6 @@ def sql_raw_driver(df: DataFrame, conf: dict) -> DataFrame:
     argnames = [f"__sqlarg{i}" for i in range(len(arg_cols))]
     if "content" not in df.columns:
         df = df.withColumn("content", F.lit(None).cast("string"))
-    schema = df.schema
     if driver == "duckdb" and dsn not in (":memory:", ""):
         df = df.coalesce(1)  # embedded single-writer file
 
@@ -281,58 +278,38 @@ def sql_raw_driver(df: DataFrame, conf: dict) -> DataFrame:
             "absent here (duckdb/postgres are live)"
         )
 
-    def run(batches: Iterator) -> Iterator:
+    def call(con, row):
         import json as _json
 
-        con = None
-        for pdf in batches:
-            if con is None and len(pdf):
-                con = _connect()
-            contents, errs = [], []
-            for idx in range(len(pdf)):
-                if pdf[ERROR].iloc[idx] is not None:
-                    contents.append(pdf["content"].iloc[idx])
-                    errs.append(pdf[ERROR].iloc[idx])
-                    continue
-                raw = [pdf[a].iloc[idx] for a in argnames]
-                args = [
-                    raw[o] if o is not None else raw[j]
-                    for j, o in enumerate(order)
-                ]
-                try:
-                    if driver == "duckdb":
-                        cur = con.execute(q_pos, args)
-                        rows = cur.fetchall()
-                        cols = [d[0] for d in (cur.description or [])]
-                    else:
-                        from bento_spark.operators.pgwire import pg_quote
+        raw = [row[a] for a in argnames]
+        args = [raw[o] if o is not None else raw[j] for j, o in enumerate(order)]
+        if driver == "duckdb":
+            cur = con.execute(q_pos, args)
+            rows = cur.fetchall()
+            cols = [d[0] for d in (cur.description or [])]
+        else:
+            from bento_spark.operators.pgwire import pg_quote
 
-                        k = 0
-                        out = []
-                        for kind, p in segs:
-                            if kind == "ph":
-                                out.append(pg_quote(args[k]))
-                                k += 1
-                            else:
-                                out.append(p)
-                        cols, rows = con.query("".join(out))
-                    if exec_only:
-                        contents.append(pdf["content"].iloc[idx])
-                    else:
-                        contents.append(_json.dumps(
-                            [dict(zip(cols, r)) for r in rows],
-                            separators=(",", ":"), default=str,
-                        ))
-                    errs.append(None)
-                except Exception as ex:  # noqa: BLE001 - per-message error
-                    contents.append(pdf["content"].iloc[idx])
-                    errs.append(f"sql_raw: {type(ex).__name__}: {ex}")
-            pdf = pdf.copy()
-            pdf["content"] = contents
-            pdf[ERROR] = errs
-            yield pdf
+            k = 0
+            out = []
+            for kind, p in segs:
+                if kind == "ph":
+                    out.append(pg_quote(args[k]))
+                    k += 1
+                else:
+                    out.append(p)
+            cols, rows = con.query("".join(out))
+        if exec_only:
+            return row["content"]
+        return _json.dumps(
+            [dict(zip(cols, r)) for r in rows],
+            separators=(",", ":"), default=str,
+        )
 
-    return df.mapInPandas(run, schema).drop(*argnames)
+    return per_message(
+        df, call, open=_connect,
+        errors={Exception: lambda ex: f"sql_raw: {type(ex).__name__}: {ex}"},
+    ).drop(*argnames)
 
 
 def register_pipeline_processors() -> None:

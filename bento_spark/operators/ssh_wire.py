@@ -872,24 +872,6 @@ ATTR_PERMISSIONS = 0x04
 ATTR_ACMODTIME = 0x08
 
 
-def encode_attrs(
-    size: int | None = None, perms: int | None = None,
-    mtime: int | None = None,
-) -> bytes:
-    flags = 0
-    body = b""
-    if size is not None:
-        flags |= ATTR_SIZE
-        body += struct.pack(">Q", size)
-    if perms is not None:
-        flags |= ATTR_PERMISSIONS
-        body += struct.pack(">I", perms)
-    if mtime is not None:
-        flags |= ATTR_ACMODTIME
-        body += struct.pack(">II", mtime, mtime)
-    return struct.pack(">I", flags) + body
-
-
 def decode_attrs(r: Reader) -> dict:
     flags = r.uint32()
     out: dict = {}

@@ -3,8 +3,9 @@ through an external program, line-per-message.
 
 Reference: internal/impl/pure/processor_subprocess.go (long-lived
 child, one line in -> one line out) and processor_command.go (one
-exec per batch). Spark spelling: ONE child process per partition via
-``mapPartitions`` — the legitimate per-partition imperative case; the
+exec per batch). Spark spelling: ONE child process per partition,
+fed every Arrow batch of the partition inside ``mapInPandas`` — the
+legitimate per-partition imperative case, and it runs on streams; the
 child amortizes across every row in the partition exactly like the
 reference's long-lived subprocess. Content goes in as newline-joined
 UTF-8, comes back 1:1 by order (count mismatch errors the partition —
@@ -18,7 +19,7 @@ from __future__ import annotations
 
 import subprocess as _sp
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -29,15 +30,15 @@ def subprocess_processor(
     other = [c for c in df.columns if c != col]
     schema = df.select(*other).schema.add(col, "string")
 
-    def run_partition(rows):
-        rows = list(rows)
-        if not rows:
+    def run(batches):
+        pdf = _whole_partition(batches)
+        if pdf is None:
             return
         # trailing newline so N input lines always produce N terminated
         # output lines (an empty final message would otherwise vanish)
-        payload = (
-            "\n".join("" if r[col] is None else str(r[col]) for r in rows) + "\n"
-        )
+        payload = "\n".join(
+            "" if v is None else str(v) for v in pdf[col]
+        ) + "\n"
         proc = _sp.run(
             argv,
             input=payload.encode(),
@@ -54,17 +55,26 @@ def subprocess_processor(
         out_lines = proc.stdout.decode().split("\n")
         if out_lines and out_lines[-1] == "":
             out_lines.pop()
-        if len(out_lines) != len(rows):
+        if len(out_lines) != len(pdf):
             raise RuntimeError(
-                f"subprocess {argv!r}: {len(rows)} lines in, "
+                f"subprocess {argv!r}: {len(pdf)} lines in, "
                 f"{len(out_lines)} out — line-per-message contract broken"
             )
-        for r, line in zip(rows, out_lines):
-            yield Row(**{**{c: r[c] for c in other}, col: line})
+        pdf[col] = out_lines
+        yield pdf[schema.names]
 
-    return df.sparkSession.createDataFrame(
-        df.rdd.mapPartitions(run_partition), schema
-    )
+    return df.mapInPandas(run, schema)
+
+
+def _whole_partition(batches):
+    """All Arrow batches of a partition as one frame (None when empty):
+    the batch-per-child processors start one child per partition."""
+    import pandas as pd
+
+    pdfs = list(batches)
+    if not sum(len(p) for p in pdfs):
+        return None
+    return pd.concat(pdfs, ignore_index=True)
 
 
 def command_per_message(
@@ -76,9 +86,9 @@ def command_per_message(
     processor — with args resolved per row by the tier-c Bloblang
     interpreter. stdout replaces the content; a non-zero exit sets
     ``_error``."""
-    from collections.abc import Iterator
-
-    from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+    from bento_spark.operators.envelope import (
+        META, MessageError, ensure_envelope, per_message,
+    )
 
     df = ensure_envelope(df)
     if col not in df.columns:
@@ -86,51 +96,31 @@ def command_per_message(
     src = args_mapping if args_mapping.strip().startswith("root") else (
         "root = " + args_mapping
     )
-    schema = df.schema
 
-    def run(batches: Iterator) -> Iterator:
+    def call(row):
         from bento_spark.bloblang.interp import interpret_mapping
 
-        for pdf in batches:
-            metas = pdf[META] if META in pdf else [{} for _ in range(len(pdf))]
-            outs, errs = [], []
-            for content, meta, err in zip(pdf[col], metas, pdf[ERROR]):
-                if err is not None:
-                    outs.append(content)
-                    errs.append(err)
-                    continue
-                try:
-                    args, _ = interpret_mapping(
-                        src, content or "", dict(meta or {})
-                    )
-                    if not isinstance(args, (list, tuple)):
-                        args = [] if args is None else [args]
-                    proc = _sp.run(
-                        [name, *[str(a) for a in args]],
-                        input=(content or "").encode(),
-                        stdout=_sp.PIPE, stderr=_sp.PIPE,
-                        timeout=timeout, check=False,
-                    )
-                    if proc.returncode != 0:
-                        outs.append(content)
-                        errs.append(
-                            f"command exited {proc.returncode}: "
-                            f"{proc.stderr.decode(errors='replace')[:200]}"
-                        )
-                    else:
-                        outs.append(
-                            proc.stdout.decode(errors="replace").rstrip("\n")
-                        )
-                        errs.append(None)
-                except Exception as ex:  # noqa: BLE001 - per-message error
-                    outs.append(content)
-                    errs.append(f"command: {type(ex).__name__}: {ex}")
-            pdf = pdf.copy()
-            pdf[col] = outs
-            pdf[ERROR] = errs
-            yield pdf
+        content = row[col]
+        args, _ = interpret_mapping(src, content or "", dict(row[META] or {}))
+        if not isinstance(args, (list, tuple)):
+            args = [] if args is None else [args]
+        proc = _sp.run(
+            [name, *[str(a) for a in args]],
+            input=(content or "").encode(),
+            stdout=_sp.PIPE, stderr=_sp.PIPE,
+            timeout=timeout, check=False,
+        )
+        if proc.returncode != 0:
+            raise MessageError(
+                f"command exited {proc.returncode}: "
+                f"{proc.stderr.decode(errors='replace')[:200]}"
+            )
+        return proc.stdout.decode(errors="replace").rstrip("\n")
 
-    return df.mapInPandas(run, schema)
+    return per_message(
+        df, call, out=col,
+        errors={Exception: lambda ex: f"command: {type(ex).__name__}: {ex}"},
+    )
 
 
 def awk_processor(df: DataFrame, col: str, program: str) -> DataFrame:
@@ -836,13 +826,14 @@ def awk_bento_processor(
     other = [c for c in df.columns if c != content_col]
     schema = df.select(*other).schema.add(content_col, "string")
 
-    def run_partition(rows):
-        rows = list(rows)
-        if not rows:
+    def run(batches):
+        pdf = _whole_partition(batches)
+        if pdf is None:
             return
+        rows = pdf.to_dict("records")
         lines = []
         for r in rows:
-            meta = dict(r[META]) if META in r.__fields__ and r[META] else {}
+            meta = dict(r[META] or {})
             doc = "" if r[content_col] is None else str(r[content_col])
             kv: list = []
             try:
@@ -886,6 +877,7 @@ def awk_bento_processor(
             raise RuntimeError(
                 f"awk dialect: {len(rows)} in, {len(out_lines)} out"
             )
+        metas, contents = [], []
         for r, line in zip(rows, out_lines):
             m_enc, kv_enc, raw_enc = line.split("\x1d")
             pairs = []
@@ -900,7 +892,7 @@ def awk_bento_processor(
                 )
             else:
                 out_doc = _awk_unescape(raw_enc)
-            new_meta = dict(r[META]) if META in r.__fields__ and r[META] else {}
+            new_meta = dict(r[META] or {})
             for pr in m_enc.split("\x1e"):
                 if not pr:
                     continue
@@ -915,22 +907,16 @@ def awk_bento_processor(
                 # the reference, so Process() errors the message with its
                 # ORIGINAL content and metadata — discard the awk run's
                 # mutations, not just flag them (ADVICE r11 #5)
-                fields = {
-                    **{c: r[c] for c in other},
-                    META: dict(r[META])
-                    if META in r.__fields__ and r[META] else {},
-                    content_col: r[content_col],
-                }
-                if fields.get(ERROR) is None:
-                    fields[ERROR] = awk_err
+                metas.append(dict(r[META] or {}))
+                contents.append(r[content_col])
+                if r[ERROR] is None:
+                    r[ERROR] = awk_err
             else:
-                fields = {
-                    **{c: r[c] for c in other},
-                    META: new_meta,
-                    content_col: out_doc,
-                }
-            yield Row(**fields)
+                metas.append(new_meta)
+                contents.append(out_doc)
+        pdf[META] = metas
+        pdf[content_col] = contents
+        pdf[ERROR] = [r[ERROR] for r in rows]
+        yield pdf[schema.names]
 
-    return df.sparkSession.createDataFrame(
-        df.rdd.mapPartitions(run_partition), schema
-    )
+    return df.mapInPandas(run, schema)

@@ -9,16 +9,14 @@ functions.go:11); in-bound buffers are allocated with the guest's own
 and freed after the call (processor_wazero.go:128-132, 223-236); the
 configured ``function`` (default ``process``) runs once per message.
 
-Spark integration: one interpreter instance per partition inside
-mapInPandas (the reference pools one runtime per thread for the same
+Spark integration: one interpreter instance per partition, opened by
+``envelope.per_message`` (the reference pools one runtime per thread for the same
 reason — module state is not thread-safe), module bytes shipped in the
 task closure so executors don't need the file. Guest traps and ABI
 errors land in the per-message `_error` channel.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -118,9 +116,7 @@ class BentoWasmRunner:
 def wasm_processor(df: DataFrame, conf: dict) -> DataFrame:
     """YAML `wasm` processor: run `function` from `module_path` per
     message; content and metadata mutations flow back, traps -> _error."""
-    import pandas as pd
-
-    from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+    from bento_spark.operators.envelope import META, per_message
 
     with open(conf["module_path"], "rb") as fh:
         module_bytes = fh.read()
@@ -138,42 +134,17 @@ def wasm_processor(df: DataFrame, conf: dict) -> DataFrame:
     # upstream redistributes, so cluster-scale inputs pay nothing.
     from bento_spark.operators.dedup import ensure_parallelism
 
-    df = ensure_parallelism(ensure_envelope(df))
-    schema = df.schema
+    def call(runner, row):
+        out, row[META] = runner.run(
+            str(row["content"]).encode(), dict(row[META] or {})
+        )
+        return out.decode("utf-8", "replace")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        runner = BentoWasmRunner(module_bytes, function)
-        for pdf in batches:
-            contents = []
-            metas = []
-            errs = []
-            for content, meta, err in zip(
-                pdf["content"], pdf[META], pdf[ERROR]
-            ):
-                meta = dict(meta) if meta is not None else {}
-                if err is not None:
-                    contents.append(content)
-                    metas.append(meta)
-                    errs.append(err)
-                    continue
-                try:
-                    out, new_meta = runner.run(
-                        str(content).encode(), meta
-                    )
-                    contents.append(out.decode("utf-8", "replace"))
-                    metas.append(new_meta)
-                    errs.append(None)
-                except WasmTrap as ex:
-                    contents.append(content)
-                    metas.append(meta)
-                    errs.append(f"wasm: {ex}")
-            pdf = pdf.copy()
-            pdf["content"] = contents
-            pdf[META] = metas
-            pdf[ERROR] = errs
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return per_message(
+        ensure_parallelism(df), call,
+        open=lambda: BentoWasmRunner(module_bytes, function),
+        errors={WasmTrap: lambda ex: f"wasm: {ex}"},
+    )
 
 
 # ---------------------------------------------------------------------------

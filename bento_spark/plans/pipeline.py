@@ -1833,36 +1833,15 @@ def _lookup_processor(make_client, fetch):
 
     def proc(df: DataFrame, conf) -> DataFrame:
         from bento_spark.bloblang.field import compile_field
-        from bento_spark.operators.envelope import ERROR, ensure_envelope
+        from bento_spark.operators.envelope import ensure_envelope, per_message
 
         df = ensure_envelope(df)
         key_tpl = str(conf.get("id") or conf.get("key") or "${! content() }")
         df = df.withColumn("__lk", compile_field(key_tpl, df))
-        if "content" not in df.columns:
-            df = df.withColumn("content", F.lit(None).cast("string"))
-        schema = df.schema
-
-        def run(batches):
-            client = make_client(conf)
-            for pdf in batches:
-                contents, errs = [], []
-                for k, c, e in zip(pdf["__lk"], pdf["content"], pdf[ERROR]):
-                    if e is not None:
-                        contents.append(c)
-                        errs.append(e)
-                        continue
-                    try:
-                        contents.append(fetch(client, conf, k))
-                        errs.append(None)
-                    except Exception as ex:  # noqa: BLE001 - per-message error
-                        contents.append(c)
-                        errs.append(f"{type(ex).__name__}: {ex}")
-                pdf = pdf.copy()
-                pdf["content"] = contents
-                pdf[ERROR] = errs
-                yield pdf
-
-        return df.mapInPandas(run, schema).drop("__lk")
+        return per_message(
+            df, lambda client, row: fetch(client, conf, row["__lk"]),
+            open=lambda: make_client(conf),
+        ).drop("__lk")
 
     return proc
 
@@ -2035,7 +2014,7 @@ def _proc_bigquery_select(df: DataFrame, conf) -> DataFrame:
 
     from bento_spark.bloblang.field import compile_field
     from bento_spark.bloblang.interp import interpret_mapping
-    from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+    from bento_spark.operators.envelope import META, ensure_envelope, per_message
 
     conf = conf or {}
     if conf.get("query") or conf.get("sql"):
@@ -2055,53 +2034,29 @@ def _proc_bigquery_select(df: DataFrame, conf) -> DataFrame:
     key_tpl = conf.get("id") or conf.get("key")
 
     df = ensure_envelope(df)
-    if "content" not in df.columns:
-        df = df.withColumn("content", F.lit(None).cast("string"))
     if key_tpl and not args_src:
         # legacy single-key surface: one positional parameter
         df = df.withColumn("__bq_arg", compile_field(str(key_tpl), df))
-    schema = df.schema
 
-    def run(batches):
-        client = _bq_client(conf)
-        for pdf in batches:
-            metas = pdf[META] if META in pdf else [{} for _ in range(len(pdf))]
-            keys = pdf["__bq_arg"] if "__bq_arg" in pdf else [None] * len(pdf)
-            contents, errs = [], []
-            for content, meta, key, err in zip(
-                pdf["content"], metas, keys, pdf[ERROR]
-            ):
-                if err is not None:
-                    contents.append(content)
-                    errs.append(err)
-                    continue
-                try:
-                    if args_src:
-                        args, _ = interpret_mapping(
-                            args_src, content or "", dict(meta or {})
-                        )
-                        if not isinstance(args, (list, tuple)):
-                            raise TypeError(
-                                "args_mapping returned non-array result: "
-                                f"{type(args).__name__}"
-                            )
-                        args = list(args)
-                    elif key_tpl:
-                        args = [key]
-                    else:
-                        args = None
-                    rows = client.query(sql, params=args)
-                    contents.append(_json.dumps(rows, separators=(",", ":")))
-                    errs.append(None)
-                except Exception as ex:  # noqa: BLE001 - per-message error
-                    contents.append(content)
-                    errs.append(f"{type(ex).__name__}: {ex}")
-            pdf = pdf.copy()
-            pdf["content"] = contents
-            pdf[ERROR] = errs
-            yield pdf
+    def call(client, row):
+        if args_src:
+            args, _ = interpret_mapping(
+                args_src, row.get("content") or "", dict(row[META] or {})
+            )
+            if not isinstance(args, (list, tuple)):
+                raise TypeError(
+                    "args_mapping returned non-array result: "
+                    f"{type(args).__name__}"
+                )
+            args = list(args)
+        elif key_tpl:
+            args = [row["__bq_arg"]]
+        else:
+            args = None
+        rows = client.query(sql, params=args)
+        return _json.dumps(rows, separators=(",", ":"))
 
-    out = df.mapInPandas(run, schema)
+    out = per_message(df, call, open=lambda: _bq_client(conf))
     return out.drop("__bq_arg") if "__bq_arg" in df.columns else out
 
 

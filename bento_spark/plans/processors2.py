@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bento_spark.operators.envelope import ERROR, META, ensure_envelope
+from bento_spark.operators.envelope import ERROR, ensure_envelope, per_message
 from bento_spark.plans.pipeline import (
     PROCESSOR_RESOURCES,
     PROCESSORS,
@@ -265,19 +265,14 @@ def _proc_xml(df: DataFrame, conf) -> DataFrame:
     (stdlib ElementTree, Arrow-batched; attributes keyed ``-attr``,
     text ``#text``, repeated children fold to arrays — the reference's
     documented conversion rules)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    import json as _json
+    import xml.etree.ElementTree as ET
 
     op = conf.get("operator", "to_json") if isinstance(conf, dict) else "to_json"
     if op != "to_json":
         raise ConfigError(f"xml: unknown operator {op!r}")
-    df = ensure_envelope(df)
-    schema = df.schema
 
     def _elem(e):
-        import json as _json  # noqa: F401
-
         d: dict = {}
         for k, v in e.attrib.items():
             d[f"-{k}"] = v
@@ -298,31 +293,13 @@ def _proc_xml(df: DataFrame, conf) -> DataFrame:
                 d[kid.tag] = v
         return d
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
-        import xml.etree.ElementTree as ET
+    def call(row):
+        root = ET.fromstring(row["content"])
+        return _json.dumps({root.tag: _elem(root)}, separators=(",", ":"))
 
-        for pdf in batches:
-            out_c, out_e = [], []
-            for c, err in zip(pdf["content"], pdf[ERROR]):
-                if err is not None:
-                    out_c.append(c)
-                    out_e.append(err)
-                    continue
-                try:
-                    root = ET.fromstring(c)
-                    out_c.append(_json.dumps(
-                        {root.tag: _elem(root)}, separators=(",", ":")))
-                    out_e.append(None)
-                except ET.ParseError as ex:
-                    out_c.append(c)
-                    out_e.append(f"xml: {ex}")
-            pdf = pdf.copy()
-            pdf["content"] = out_c
-            pdf[ERROR] = out_e
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return per_message(
+        df, call, errors={ET.ParseError: lambda ex: f"xml: {ex}"}
+    )
 
 
 PROCESSORS["xml"] = _proc_xml
@@ -343,45 +320,30 @@ def _proc_sql_select(df: DataFrame, conf) -> DataFrame:
     result = conf.get("result_column", "sql_result")
     if driver == "postgres":
         import json as _json
-        from collections.abc import Iterator
         from urllib.parse import urlparse
-
-        import pandas as pd
-        from pyspark.sql.types import StringType
 
         from bento_spark.operators.pgwire import PostgresClient
 
         u = urlparse(conf["dsn"])
-        df = ensure_envelope(df)
-        # StructType.add mutates in place; df caches its schema object
-        from pyspark.sql.types import StructField, StructType
 
-        schema = StructType(
-            list(df.schema.fields) + [StructField(result, StringType())]
+        def connect():
+            return PostgresClient(
+                host=u.hostname or "localhost", port=u.port or 5432,
+                user=u.username or "postgres", password=u.password or "",
+                database=(u.path or "/postgres").lstrip("/"),
+            )
+
+        def call(client, row):
+            names, rows = client.query(sql)
+            return _json.dumps(
+                [dict(zip(names, r)) for r in rows],
+                separators=(",", ":"), default=str,
+            )
+
+        # every message is queried; a failed query fails the task
+        return per_message(
+            df, call, out=result, open=connect, skip_errored=False, errors={}
         )
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            client = None
-            for pdf in batches:
-                if client is None and len(pdf):
-                    client = PostgresClient(
-                        host=u.hostname or "localhost", port=u.port or 5432,
-                        user=u.username or "postgres",
-                        password=u.password or "",
-                        database=(u.path or "/postgres").lstrip("/"),
-                    )
-                vals = []
-                for _ in range(len(pdf)):
-                    cols, rows = client.query(sql)
-                    vals.append(_json.dumps(
-                        [dict(zip(cols, r)) for r in rows],
-                        separators=(",", ":"), default=str,
-                    ))
-                pdf = pdf.copy()
-                pdf[result] = vals
-                yield pdf
-
-        return df.mapInPandas(run, schema)
     # Spark-catalog fallback: the dimension is a registered view —
     # one driver-side query, result broadcast as a literal (bounded
     # dimension reads, the sql_select enrichment contract)
@@ -403,9 +365,8 @@ def _proc_file(df: DataFrame, conf) -> DataFrame:
     """`file` processor: per-message file operations (read / write /
     delete / move / stat) with interpolated paths — a narrow
     Arrow-batched map; failures flag ``_error``, never the task."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    import json as _json
+    import os
 
     from bento_spark.bloblang.field import compile_field
 
@@ -417,57 +378,35 @@ def _proc_file(df: DataFrame, conf) -> DataFrame:
         "__fp2",
         compile_field(to_tpl, df) if to_tpl else F.lit(None).cast("string"),
     )
-    schema = df.schema
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
-        import os
+    def call(row):
+        path, c = row["__fp"], row["content"]
+        if op == "read":
+            with open(path, encoding="utf-8", errors="replace") as fh:
+                return fh.read()
+        if op == "write":
+            os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+            with open(path, "w", encoding="utf-8") as fh:
+                fh.write(c if c is not None else "")
+        elif op == "delete":
+            os.remove(path)
+        elif op in ("move", "rename"):
+            os.replace(path, row["__fp2"])
+        elif op == "stat":
+            st = os.stat(path)
+            return _json.dumps({
+                "name": os.path.basename(path),
+                "size": st.st_size,
+                "mod_time_unix": int(st.st_mtime),
+                "is_dir": os.path.isdir(path),
+            }, separators=(",", ":"))
+        else:
+            raise ValueError(f"unknown operation {op!r}")
+        return c
 
-        for pdf in batches:
-            out_c, out_e = [], []
-            for path, to, c, err in zip(pdf["__fp"], pdf["__fp2"],
-                                        pdf["content"], pdf[ERROR]):
-                if err is not None:
-                    out_c.append(c)
-                    out_e.append(err)
-                    continue
-                try:
-                    if op == "read":
-                        with open(path, encoding="utf-8",
-                                  errors="replace") as fh:
-                            out_c.append(fh.read())
-                    elif op == "write":
-                        os.makedirs(os.path.dirname(path) or ".",
-                                    exist_ok=True)
-                        with open(path, "w", encoding="utf-8") as fh:
-                            fh.write(c if c is not None else "")
-                        out_c.append(c)
-                    elif op == "delete":
-                        os.remove(path)
-                        out_c.append(c)
-                    elif op in ("move", "rename"):
-                        os.replace(path, to)
-                        out_c.append(c)
-                    elif op == "stat":
-                        st = os.stat(path)
-                        out_c.append(_json.dumps({
-                            "name": os.path.basename(path),
-                            "size": st.st_size,
-                            "mod_time_unix": int(st.st_mtime),
-                            "is_dir": os.path.isdir(path),
-                        }, separators=(",", ":")))
-                    else:
-                        raise ValueError(f"unknown operation {op!r}")
-                    out_e.append(None)
-                except Exception as ex:  # noqa: BLE001 - per-message error
-                    out_c.append(c)
-                    out_e.append(f"file {op}: {ex}")
-            pdf = pdf.copy()
-            pdf["content"] = out_c
-            pdf[ERROR] = out_e
-            yield pdf
-
-    return df.mapInPandas(run, schema).drop("__fp", "__fp2")
+    return per_message(
+        df, call, errors={Exception: lambda ex: f"file {op}: {ex}"}
+    ).drop("__fp", "__fp2")
 
 
 PROCESSORS["file"] = _proc_file
@@ -480,52 +419,37 @@ def _proc_template(df: DataFrame, conf) -> DataFrame:
     supported subset is field actions — `{{ .a }}` / `{{ .a.b }}` /
     `{{ . }}` — which covers the data-templating role; control
     constructs (range/if) raise clearly rather than mis-render."""
+    import json as _json
     import re as _re
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     text = str(conf.get("text", "") if isinstance(conf, dict) else conf)
     if _re.search(r"\{\{-?\s*(range|if|with|template|block)\b", text):
         raise ConfigError(
             "template: only field actions ({{ .path }}) are supported"
         )
-    df = ensure_envelope(df)
-    schema = df.schema
     pat = _re.compile(r"\{\{-?\s*\.([A-Za-z0-9_.]*)\s*-?\}\}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json as _json
+    def call(row):
+        try:
+            doc = _json.loads(row["content"])
+        except (ValueError, TypeError):
+            doc = row["content"]
 
-        for pdf in batches:
-            out = []
-            for c in pdf["content"]:
-                try:
-                    doc = _json.loads(c)
-                except (ValueError, TypeError):
-                    doc = c
+        def sub(m):
+            cur = doc
+            path = m.group(1)
+            if path:
+                for part in path.split("."):
+                    cur = cur.get(part) if isinstance(cur, dict) else None
+            if cur is None:
+                return "<no value>"  # Go's missing-key render
+            if isinstance(cur, (dict, list)):
+                return _json.dumps(cur, separators=(",", ":"))
+            return str(cur)
 
-                def sub(m, doc=doc):
-                    cur = doc
-                    path = m.group(1)
-                    if path:
-                        for part in path.split("."):
-                            if isinstance(cur, dict):
-                                cur = cur.get(part)
-                            else:
-                                cur = None
-                    if cur is None:
-                        return "<no value>"  # Go's missing-key render
-                    if isinstance(cur, (dict, list)):
-                        return _json.dumps(cur, separators=(",", ":"))
-                    return str(cur)
+        return pat.sub(sub, text)
 
-                out.append(pat.sub(sub, text))
-            pdf = pdf.copy()
-            pdf["content"] = out
-            yield pdf
-
-    return df.mapInPandas(run, schema)
+    return per_message(df, call, skip_errored=False, errors={})
 
 
 PROCESSORS["template"] = _proc_template

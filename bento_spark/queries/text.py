@@ -187,11 +187,6 @@ def _with_lang_cols(docs: DataFrame) -> DataFrame:
     )
 
 
-def _hits_sql(lang: str) -> str:
-    sl = "[" + ",".join(f"'{s}'" for s in STOPWORDS[lang]) + "]"
-    return f"len(list_filter(w, x -> list_contains({sl}, x)))"
-
-
 def _lang_oracle_sql() -> str:
     """text_language_id oracle: ONE unnest pass computes every
     language's stopword-hit count as a hash-set-membership filtered

@@ -113,21 +113,6 @@ import threading
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def get_spark(app_name: str = "bento_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults."""
@@ -172,6 +157,17 @@ def get_spark(app_name: str = "bento_spark", cpus: int | None = None) -> SparkSe
     )
     spark = builder.getOrCreate() if cds is None else cds.get_or_create(builder)
     spark.sparkContext.setLogLevel("WARN")
+    # A batch read of one path looks for a streaming sink's
+    # `_spark_metadata` log under that path taken literally; a glob such
+    # as `<dir>/*.json` is no file, so every such read logged a WARN
+    # with a full FileNotFoundException stack before reading the glob's
+    # files as usual. ERROR on that logger also hides its other
+    # metadata-path probe warnings; none of them changes a read.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark
 
 
@@ -430,26 +426,3 @@ def _cds_launch() -> _CdsLaunch | None:
         training._finish(None)
         return None
     return training
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
-    """Load the standard test tables from a scale-factor dir and register views.
-
-    Returns a name -> DataFrame dict; each is also available to spark.sql()
-    as a temp view of the same name.
-    """
-    from pyspark.sql import functions as F
-
-    out = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            for f in df.schema.fields:
-                if f.name == "ts" and f.dataType.simpleString() == "bigint":
-                    df = df.withColumn(
-                        "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                    )
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

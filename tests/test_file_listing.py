@@ -5,9 +5,14 @@ files that were just listed."""
 from __future__ import annotations
 
 import json
+import os
+import pathlib
+import subprocess
+import sys
 
 import pytest
 
+ROOT = pathlib.Path(__file__).resolve().parents[1]
 SCHEMA = "k STRING, v BIGINT"
 FILES = 40
 
@@ -64,3 +69,25 @@ def test_batch_read_over_many_files_runs_no_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_glob_read_logs_no_missing_metadata_stack(tmp_path, capfd):
+    """A batch read of a glob looks for a sink's metadata log under the
+    literal glob, which is no file; that must not log a stack trace. The
+    read runs in a child process: the shared session's JVM writes to the
+    stderr it was started with, which ``capfd`` does not see."""
+    spool = _spool(tmp_path / "in", n=3)
+    script = (
+        "from bento_spark.plans.pipeline import build_pipeline\n"
+        "from bento_spark.session import get_spark\n"
+        "spark = get_spark('glob-read', cpus=1)\n"
+        "df = build_pipeline(spark, {'input': {'json': {'path': %r}},"
+        " 'output': {'drop': {}}}).dataframe()\n"
+        "print('rows', df.count())\n" % (spool + "/*.json")
+    )
+    env = {**os.environ, "PYTHONPATH": str(ROOT), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=300)
+    out, err = capfd.readouterr()
+    assert out.splitlines()[-1] == "rows 3"
+    assert "Assume no metadata directory" not in err
+    assert "FileNotFoundException" not in err
